@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan of selected
   * catalog queries, for scale review (pushdown / pruning / join strategy /
   * codegen spans). Not part of the driver contract.
@@ -17,16 +15,8 @@ object Plans {
     val sfDir = if (rest.nonEmpty) rest(0) else "/root/testdata/sf0.01"
     val names = rest.drop(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", if (run) "32" else "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", run) // match Bench when timing
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create(master = Some(s"local[$cpus]"),
+      shufflePartitions = Some(cpus.toInt))
     spark.sparkContext.setLogLevel("ERROR")
     val qs = SparkEntry.queries
     val selected = if (names.nonEmpty) names.toSeq else qs.keys.toSeq.sorted

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,21 +7,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet // optional query-name filter
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // a 50-query engine session compiles >100 generated classes; the
-      // default 100-entry codegen cache thrashes and big classes recompile
-      // per run (static conf, must be set before session creation)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench/GraftSession: AQE may re-optimize cached-plan
-      // materialization (coalesced persists; results unaffected)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create(master = Some(s"local[$cpus]"),
+      shufflePartitions = Some(cpus.toInt))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ListBuffer[String]()

@@ -194,7 +194,6 @@ private[graft] object DslQueries {
       (s: SparkSession, d: String) => {
         s.conf.set("spark.graft.now", "2026-01-15 10:30:00")
         try {
-          graft.functions.Registry.registerAll(s)
           // DataFrame construction analyzes eagerly, so graft_now() has
           // resolved (and read the conf) by the time select returns
           t(s, d, "customer").filter(col("c_custkey") <= 10).select(

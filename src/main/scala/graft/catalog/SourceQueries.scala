@@ -374,8 +374,6 @@ private[graft] object SourceQueries {
     // Expression, all inside ONE spark.sql statement
     ("q_dsl_sql_registry",
       (s: SparkSession, d: String) => {
-        graft.functions.Registry.registerAll(s)
-        graft.plans.GraftExpressions.register(s)
         t(s, d, "customer").createOrReplaceTempView("customer_sqlreg")
         s.sql("""SELECT c_custkey,
           fn_transform(
@@ -404,7 +402,6 @@ private[graft] object SourceQueries {
     // hashes) bit-for-bit
     ("q_dsl_sql_sketch",
       (s: SparkSession, d: String) => {
-        graft.plans.GraftExpressions.register(s)
         t(s, d, "documents").createOrReplaceTempView("documents_sqlsk")
         s.sql("""SELECT lang, count(*) AS n_docs,
             graft_kmv_distinct(

@@ -32,9 +32,6 @@ object Parser {
 
   private val FnPrefix = "fn_transform_"
 
-  /** True when the string contains at least one DSL function call. */
-  def isDslCall(s: String): Boolean = s.contains(FnPrefix) && s.contains("(")
-
   /** Split on top-level commas, tracking paren depth — port of the
     * reference's `split_parameters` (aje-stage-dms-load.py:102-116). */
   def splitTopLevel(s: String, sep: Char = ','): List[String] = {

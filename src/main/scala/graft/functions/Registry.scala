@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -9,8 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * SQL surface for the transformation DSL (SURVEY.md §4's optional nicety):
- * registers the `fn_transform_*` family in the session's FunctionRegistry so
- * the operators compose inside `expr()` strings and plain `spark.sql(...)`.
+ * the `fn_transform_*` family, which [[graft.GraftExtensions]] installs in
+ * every session's FunctionRegistry so the operators compose inside `expr()`
+ * strings and plain `spark.sql(...)`.
  *
  * Two forms:
  *   - `fn_transform('<TRANSFORMATION>'[, '<datatype>'])` — the FULL metadata
@@ -36,9 +37,8 @@ object Registry {
       throw Transforms.CompileError(s"$what must be a string literal, got: $other")
   }
 
-  /** Every SQL-callable DSL name as (name, builder) — ONE list consumed by
-    * both registration doors: [[registerAll]] (programmatic) and
-    * [[graft.GraftExtensions]] (the `spark.sql.extensions` config path). */
+  /** Every SQL-callable DSL name as (name, builder), installed into each
+    * session by [[graft.GraftExtensions]]. */
   val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     // The full DSL through one door: fn_transform('<dsl>'[, '<type>'])
     "fn_transform" -> ((exprs: Seq[Expression]) => {
@@ -76,10 +76,4 @@ object Registry {
       E(when(p.isNull, "190001")
         .otherwise(concat(p.cast("string"), lpad(e.cast("string"), 2, "0"))))
     }))
-
-  /** Register every SQL-callable DSL name on the session. Idempotent. */
-  def registerAll(spark: SparkSession): Unit =
-    for ((name, builder) <- sqlFunctions)
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
 }

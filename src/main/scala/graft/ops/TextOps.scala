@@ -316,35 +316,6 @@ object TextOps {
         col("n_removed"))
   }
 
-  /** Per-document n-gram repetition character stats — the building block of
-    * the Gopher repetition gates (Rae et al. 2021, arXiv:2112.11446 §A1.1,
-    * "repetitious text" filters): for word `n`-grams WITH multiplicity,
-    *   total_chars = Σ count(g)·len(g)   over every gram occurrence,
-    *   top_chars   = max count(g)·len(g) (the gram occupying the most chars),
-    *   dup_chars   = Σ count(g)·len(g)   over grams with count(g) > 1.
-    * Character counts include the single-space joiners inside a gram and use
-    * `coalesce(len, 0)` so a null-text document scores 0, not null.
-    *
-    * Distributed shape: the compiled shingle flatMap (duplicates kept), then
-    * a two-level aggregate — (doc_id, shingle) with map-side combine, then
-    * doc_id — both partial-aggregated, so the corpus-sized gram stream
-    * shuffles once at (doc_id, gram) granularity and once at doc
-    * granularity. No per-row quadratic `filter(distinct, equals)` lambda:
-    * that within-row formulation is O(|doc|·|vocab|) interpreted work per
-    * document (the DuckDB oracle replays it that way only because oracle
-    * inputs are small). */
-  def ngramRepetitionStats(df: DataFrame, idCol: String, textCol: String,
-      n: Int): DataFrame = {
-    val chars = coalesce(length(col("shingle")), lit(0)).cast("long")
-    graft.ops.Dedup.shingleTable(df, idCol, textCol, n, keepDuplicates = true)
-      .groupBy("doc_id", "shingle").agg(count(lit(1)).as("cnt"))
-      .groupBy("doc_id").agg(
-        sum(col("cnt") * chars).as("total_chars"),
-        max(col("cnt") * chars).as("top_chars"),
-        sum(when(col("cnt") > 1, col("cnt") * chars).otherwise(0L))
-          .as("dup_chars"))
-  }
-
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1) per document:
     * line-level duplication plus top/duplicate n-gram character fractions.
     * Output: (doc_id, n_lines, dup_line_frac, dup_line_char_frac,

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -1883,10 +1882,9 @@ object GraftExpressions {
       subDim: Int): Column =
     ColumnBridge.column(PqAdcTable(ColumnBridge.expression(vec), books, subDim))
 
-  /** Every SQL-callable native expression as (name, builder) — ONE list
-    * consumed by both registration doors: [[register]] (programmatic, the
-    * session-state temp registry) and [[graft.GraftExtensions]] (the
-    * `spark.sql.extensions` config path). */
+  /** Every SQL-callable native expression as (name, builder), installed
+    * into each session by [[graft.GraftExtensions]] so the native surface
+    * reaches `expr()` / SQL: `SELECT graft_rolling_hash(text) FROM docs`. */
   val sqlFunctions: Seq[(String,
       Seq[Expression] => Expression)] = Seq(
     "graft_rolling_hash" -> ((exprs: Seq[Expression]) =>
@@ -1925,11 +1923,4 @@ object GraftExpressions {
         if (exprs.length > 1)
           exprs(1).eval().asInstanceOf[UTF8String].toString
         else "NFC")))
-
-  /** Register SQL-callable names so the DSL surface reaches `expr()` / SQL:
-    * `SELECT graft_rolling_hash(text) FROM docs`. */
-  def register(spark: SparkSession): Unit =
-    for ((name, builder) <- sqlFunctions)
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
 }

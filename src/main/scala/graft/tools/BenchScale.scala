@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Empirical scaling probe (VERDICT r8 action #1): time the most expensive
   * catalog queries at sf0.1 AND at the 10x [[MakeSf]] fixture, and record
   * per-query big/small ratios in BENCH_SF1.json. 10x data -> a linear
@@ -59,15 +57,8 @@ object BenchScale {
       "BENCH_SF1.json")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = if (args.nonEmpty) args.toSeq else top25 ++ tier2
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create(master = Some(s"local[$cpus]"),
+      shufflePartitions = Some(cpus.toInt))
     spark.sparkContext.setLogLevel("WARN")
 
     // settle: unpin cached blocks, force the ContextCleaner's reference

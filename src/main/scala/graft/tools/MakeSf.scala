@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic sf1 fixture generator: 10 key-offset copies of the
@@ -64,13 +64,8 @@ object MakeSf {
     val offset = if (level == 1) KeyOffset else 10L * KeyOffset
     val partsScale = if (level == 1) 1 else 4
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create(master = Some(s"local[$cpus]"),
+      shufflePartitions = Some(cpus.toInt))
     spark.sparkContext.setLogLevel("WARN")
 
     def src(name: String): DataFrame =

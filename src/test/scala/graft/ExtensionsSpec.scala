@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The `spark.sql.extensions` door: a session built with ONLY the config
-  * string (the spark-submit deployment path — no programmatic registration)
-  * must expose the full SQL surface, with results identical to the
-  * programmatically-registered shared session. */
+  * string (the spark-submit deployment path — not the factory) must expose
+  * the full SQL surface, with results identical to the shared session. */
 class ExtensionsSpec extends SparkSpec {
 
   test("GraftExtensions injection registers the SQL surface") {

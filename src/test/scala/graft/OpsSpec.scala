@@ -146,8 +146,7 @@ class OpsSpec extends SparkSpec {
       .as[Long].collect().head
     val want = "abc".foldLeft(0L)((a, c) => (a * 31 + c) % 1000000000000000L)
     assert(got == want)
-    // registered SQL form
-    graft.plans.GraftExpressions.register(spark)
+    // SQL form, installed with the session
     val viaSql = Seq("abc").toDF("t").selectExpr("graft_rolling_hash(t)")
       .as[Long].collect().head
     assert(viaSql == want)
@@ -402,7 +401,6 @@ class OpsSpec extends SparkSpec {
       .agg(graft.plans.GraftExpressions.simhash_agg($"h").as("s"))
       .select("s").as[Long].head()
     assert(got == 5L)
-    graft.plans.GraftExpressions.register(spark)
     df.createOrReplaceTempView("simhash_agg_t")
     val viaSql = spark.sql(
       "SELECT graft_simhash_agg(h) FROM simhash_agg_t GROUP BY id")

@@ -52,15 +52,27 @@ class PlanShapeSpec extends SparkSpec {
     // fixture gains exactly ONE round-robin spread.
     import org.apache.spark.sql.functions.col
     val p = spark.sparkContext.defaultParallelism
-    val dir = java.nio.file.Files.createTempDirectory("graft_floor").toString
-    spark.read.parquet(s"$sf/documents.parquet")
-      .repartition(p * 2).write.mode("overwrite").parquet(dir)
-    val multi = spark.read.parquet(dir).select(col("doc_id"), col("text"))
-    assert(multi.rdd.getNumPartitions >= p, "fixture rewrite too small")
-    val floored = graft.ops.Similarity.spread(multi)
-    val planMulti = floored.queryExecution.executedPlan.toString
-    assert(!planMulti.contains("RoundRobinPartitioning"),
-      s"floor must be a no-op on multi-split input:\n$planMulti")
+    val dir = java.nio.file.Files.createTempDirectory("graft_floor")
+    val maxBytes = "spark.sql.files.maxPartitionBytes"
+    val savedMax = spark.conf.get(maxBytes)
+    try {
+      spark.read.parquet(s"$sf/documents.parquet")
+        .repartition(p * 2).write.mode("overwrite").parquet(dir.toString)
+      // 1 KiB splits, each below the 4 MiB file open cost, so no two share
+      // a partition: the read has >= one partition per file (2p files),
+      // whatever the core count and file sizes
+      spark.conf.set(maxBytes, "1k")
+      val multi = spark.read.parquet(dir.toString)
+        .select(col("doc_id"), col("text"))
+      assert(multi.rdd.getNumPartitions >= p, "fixture rewrite too small")
+      val floored = graft.ops.Similarity.spread(multi)
+      val planMulti = floored.queryExecution.executedPlan.toString
+      assert(!planMulti.contains("RoundRobinPartitioning"),
+        s"floor must be a no-op on multi-split input:\n$planMulti")
+    } finally {
+      spark.conf.set(maxBytes, savedMax)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
     val single = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
     val planSingle = graft.ops.Similarity.spread(single)
@@ -607,7 +619,8 @@ class PlanShapeSpec extends SparkSpec {
     // statistics-driven planning AQE cannot provide (AQE only re-plans
     // after the first shuffle has already been materialized).
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cbo").toString
+    val tmp = java.nio.file.Files.createTempDirectory("graft_cbo")
+    val dir = tmp.toString
     (1L to 50000L).map(i => (i, f"dim_name_$i%08d_padpadpad"))
       .toDF("k", "name")
       .write.mode("overwrite").parquet(s"$dir/dim")
@@ -635,7 +648,10 @@ class PlanShapeSpec extends SparkSpec {
         columns = Seq("k", "name"))
       val after = joined
       assert(after.contains("BroadcastHashJoin"), after)
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    } finally {
+      saved.foreach { case (k, v) => spark.conf.set(k, v) }
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
   }
 
   test("catalog stats drive CBO join REORDER: selective dim joins first (AQE off)") {
@@ -649,8 +665,8 @@ class PlanShapeSpec extends SparkSpec {
     // this at all (it re-plans exchanges, never join order).
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.Join
-    val dir = java.nio.file.Files.createTempDirectory("graft_reorder")
-      .toString
+    val tmp = java.nio.file.Files.createTempDirectory("graft_reorder")
+    val dir = tmp.toString
     (1L to 200000L).map(i => (i, i % 50000 + 1, i % 1000 + 1))
       .toDF("id", "k1", "k2")
       .write.mode("overwrite").parquet(s"$dir/fact")
@@ -688,7 +704,10 @@ class PlanShapeSpec extends SparkSpec {
       val after = innermostTables
       assert(after == Set("fact", "dimsmall"),
         s"with stats CBO must join the selective dim first: $after")
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    } finally {
+      saved.foreach { case (k, v) => spark.conf.set(k, v) }
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    }
   }
 
   test("round-9 additions: blocklist broadcasts its list, domain cap and " +

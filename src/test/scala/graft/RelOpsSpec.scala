@@ -76,7 +76,6 @@ class RelOpsSpec extends SparkSpec {
       .agg(graft.plans.GraftExpressions.vec_sum(col("v")).as("s"))
       .as[(Int, Seq[Long])].collect().toMap
     assert(got === Map(0 -> Seq(11L, 22L, 33L), 1 -> Seq(5L, 5L, 5L)))
-    graft.plans.GraftExpressions.register(spark)
     df.createOrReplaceTempView("vecs")
     val sql = spark.sql("SELECT g, graft_vec_sum(v) AS s FROM vecs GROUP BY g")
       .as[(Int, Seq[Long])].collect().toMap

@@ -1,0 +1,48 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** One session configuration: the suite runs under exactly the settings
+  * the factory ships, the SQL surface arrives with the session (no
+  * registration call), and no other code builds a session. */
+class SessionSpec extends SparkSpec {
+
+  test("the shared test session is the factory's session") {
+    for ((k, v) <- GraftSession.settings)
+      assert(spark.conf.get(k) == v, s"$k drifted from the factory")
+    val row = spark.sql("""SELECT
+        fn_transform('fn_transform_Concatenate(a,b)', 'string') AS t,
+        fn_transform_concatenate(a, b) AS c,
+        graft_rolling_hash(a) AS h,
+        graft_now() IS NOT NULL AS n
+      FROM VALUES ('x', 'y') AS v(a, b)""").collect().head
+    assert(row.getString(0) == "x|y")
+    assert(row.getString(1) == "x|y")
+    assert(row.getLong(2) == 'x'.toLong)
+    assert(row.getBoolean(3))
+  }
+
+  /** Scala comments and string literals, matched in one left-to-right
+    * pass so comment markers inside a string stay code. */
+  private val CommentOrString =
+    """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*""".r
+
+  private def code(src: String): String =
+    CommentOrString.replaceAllIn(src, m =>
+      if (m.matched.startsWith("/")) ""
+      else java.util.regex.Matcher.quoteReplacement(m.matched))
+
+  test("GraftSession is the only session builder in src/") {
+    val builder = """SparkSession\s*\.\s*builder\s*\(""".r
+    val files = Files.walk(Paths.get("src")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, "source tree not found from the working dir")
+    val builders = files
+      .filter(p => builder.findFirstIn(code(Files.readString(p))).isDefined)
+      .map(_.getFileName.toString).toSet
+    // ExtensionsSpec's bare builder tests the spark.sql.extensions door
+    // for sessions a platform creates
+    assert(builders == Set("GraftSession.scala", "ExtensionsSpec.scala"))
+  }
+}

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.Registry
 import graft.sources.RawZone
 
 /** RawZone (S4/S5/S6, K1/K2) + SQL FunctionRegistry surface. */
@@ -42,7 +41,6 @@ class SourcesSpec extends SparkSpec {
   test("unicode_normalize: NFC composes, NFKC folds compat, forms via SQL") {
     import spark.implicits._
     import graft.plans.GraftExpressions.unicode_normalize
-    graft.plans.GraftExpressions.register(spark)
     val rows = Seq(
       "é",       // decomposed e + combining acute
       "é",        // precomposed é
@@ -120,7 +118,6 @@ class SourcesSpec extends SparkSpec {
 
   test("registry: bloom build + probe via SQL match the Column API") {
     import spark.implicits._
-    graft.plans.GraftExpressions.register(spark)
     Seq("alpha", "beta", "gamma").toDF("w").createOrReplaceTempView("bloom_b")
     Seq("alpha", "delta").toDF("w").createOrReplaceTempView("bloom_p")
     val got = spark.sql("""
@@ -132,8 +129,6 @@ class SourcesSpec extends SparkSpec {
 
   test("registry: full-DSL literal + positional forms agree with Column API") {
     import spark.implicits._
-    Registry.registerAll(spark)
-    graft.plans.GraftExpressions.register(spark)
     Seq(("  Bob  ", "M", "T"), (null, "X", "q"))
       .toDF("name", "seg", "flag").createOrReplaceTempView("reg_t")
     val got = spark.sql("""SELECT
@@ -155,7 +150,6 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("registry: fn_transform rejects a non-literal transformation") {
-    Registry.registerAll(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT fn_transform(c_name, 'string') FROM customer_reg")
     }

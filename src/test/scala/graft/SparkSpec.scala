@@ -3,21 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM-wide session, lazy). */
+/** Shared local session for all suites (one JVM-wide session, lazy),
+  * built by the factory so every spec runs the shipped configuration. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // a 50-query engine session compiles >100 generated classes; the
-      // default 100-entry codegen cache thrashes and big classes recompile
-      // per run (static conf, must be set before session creation)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.create(master = Some("local[4]"),
+      shufflePartitions = Some(4))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -153,7 +153,6 @@ class TransformsSpec extends SparkSpec {
   test("injectable clock: spark.graft.now pins the now() arm, unset = wall") {
     spark.conf.set("spark.graft.now", "2026-01-15 10:30:00")
     val pinned = try {
-      graft.functions.Registry.registerAll(spark)
       Seq(1).toDF("x").select(
         date_format(Transforms.column("fn_transform_Datetime()", "timestamp"),
           "yyyy-MM-dd HH:mm:ss").as("lima"),

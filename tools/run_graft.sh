@@ -35,5 +35,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java -Xmx"$XMX" $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  -Dspark.ui.enabled=false \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
