@@ -276,18 +276,14 @@ private[graft] object Shared {
     * v0 on every invocation. */
   private[graft] lazy val scratchRoot: java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory("graft_scratch")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(p.toFile)))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)))
     p
-  }
-
-  private[graft] def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree))
-    f.delete(); ()
   }
 
   private[graft] def scratch(tag: String): String = {
     val d = scratchRoot.resolve(tag)
-    rmTree(d.toFile)
+    org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
     java.nio.file.Files.createDirectories(d)
     d.toString
   }

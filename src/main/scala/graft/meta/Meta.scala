@@ -93,7 +93,10 @@ final case class EndpointConfig(
 )
 
 /** Load-mode routing (reference I3: load_with_query.py:281-295,
-  * aje-stage-dms-load.py:474-495, transform_light.py:393-407). */
+  * aje-stage-dms-load.py:474-495, transform_light.py:393-407). The
+  * reference's Salesforce modes need no modes of their own: `UPSERT_LOAD`
+  * is [[LoadMode.IncrementalMerge]] with `ids = Seq("Id")`, and
+  * `SNAPSHOT_LOAD` is [[LoadMode.FullOverwrite]]. */
 sealed trait LoadMode
 object LoadMode {
   /** Non-incremental: rewrite the whole stage table (K3). */
@@ -103,10 +106,6 @@ object LoadMode {
   /** Transactional tables: delete recent `processperiod` window, then merge
     * (K5, aje-stage-dms-load.py:488-495). */
   final case class TransactionalWindowMerge(monthsBack: Int) extends LoadMode
-  /** Salesforce snapshot: batch replaces table (transform_light.py:393,407). */
-  case object Snapshot extends LoadMode
-  /** Salesforce upsert keyed on Id (transform_light.py:396-400). */
-  final case class Upsert(key: String) extends LoadMode
 
   /** Routing as the reference does it: LOAD_TYPE not in {incremental,
     * between-date} => overwrite; else merge, with the transactional window

@@ -570,8 +570,9 @@ object StreamingIngest {
    * through `SnapshotStore.commitMerge`, so concurrent readers always see a
    * complete committed version — no mid-swap window, and a reader holding
    * version N keeps it while the stream commits N+1.. (vacuum retention
-   * permitting). Contrast [[mergeSink]]: same upsert semantics, but its
-   * writeSwap target briefly vanishes mid-swap for an unlucky reader.
+   * permitting). Contrast [[mergeSink]]: same upsert semantics and a
+   * crash-atomic publish too, but a reader that lists its table during
+   * the publish's two renames can find it missing.
    * Replays converge: a checkpoint-replayed batch upserts rows the table
    * already carries — it commits a new (identical-content) version rather
    * than corrupting one. Vacuum periodically (`vacuumEvery` batches,

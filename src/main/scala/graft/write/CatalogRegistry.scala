@@ -90,15 +90,15 @@ object CatalogRegistry {
    * ANALYZE, broadcast-hash after. Column choice: pass the join/filter
    * keys (the columns [[graft.ops.Stats.profileColumns]] profiles — the
    * profiler identifies which columns matter, ANALYZE persists their
-   * stats where Catalyst reads them).
+   * stats where Catalyst reads them). One statement, one scan: the
+   * column form also stores the table's sizeInBytes and rowCount.
    */
   def analyzeStage(spark: SparkSession, db: String, table: String,
       columns: Seq[String] = Nil): Unit = {
-    val full = s"`$db`.`$table`"
-    spark.sql(s"ANALYZE TABLE $full COMPUTE STATISTICS")
-    if (columns.nonEmpty)
-      spark.sql(s"ANALYZE TABLE $full COMPUTE STATISTICS FOR COLUMNS " +
-        columns.map(c => s"`$c`").mkString(", "))
+    val forColumns =
+      if (columns.isEmpty) ""
+      else columns.map(c => s"`$c`").mkString(" FOR COLUMNS ", ", ", "")
+    spark.sql(s"ANALYZE TABLE `$db`.`$table` COMPUTE STATISTICS$forColumns")
   }
 
   /** Any data file under `path`, recursively — a partitioned table whose

@@ -2,6 +2,7 @@ package graft.write
 
 import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -29,10 +30,15 @@ import graft.meta.LoadMode
  * (see `write`'s gating contract), merge modes route through
  * `prunedMergeWrite` — the native analog of Delta's file pruning
  * (aje-stage-dms-load.py:482-495): only the partitions the batch touches
- * (plus, for the transactional-window mode, the deleted window) are read,
- * merged and swapped; every other partition directory is never opened, so
- * per-merge cost is O(|touched partitions|), not O(|table|). Unpartitioned
- * targets still rewrite fully (there is nothing to prune by).
+ * (plus, for the transactional-window mode, the deleted window) are read
+ * and merged; every other partition's files are carried over by hard link,
+ * never read or rewritten, so per-merge data I/O is O(|touched
+ * partitions|), not O(|table|). Unpartitioned targets still rewrite fully
+ * (there is nothing to prune by).
+ *
+ * Every write ends in one crash-atomic publish (see [[writeSwap]]): the
+ * stage path stays a plain parquet directory holding only live files, and
+ * a crash never leaves less than one complete version.
  */
 object MergeWriter {
 
@@ -43,8 +49,16 @@ object MergeWriter {
 
   final case class MergeStats(mode: String, rowsWritten: Long)
 
+  /** Whether a stage table is present at `path` — the one existence check
+    * [[write]] and the streaming sinks route on. Rolls back a publish a
+    * crash interrupted first (see [[writeSwap]]): with `path` missing,
+    * `path.__old` is the last complete version and moves back; with both
+    * present, the new version is complete and `path.__old` is deleted. */
   def tableExists(path: String): Boolean = {
-    val dir = Paths.get(path)
+    val (dir, old) = (Paths.get(path), Paths.get(path + ".__old"))
+    if (Files.exists(old))
+      if (Files.exists(dir)) FileUtils.deleteDirectory(old.toFile)
+      else Files.move(old, dir, StandardCopyOption.ATOMIC_MOVE)
     Files.isDirectory(dir) && {
       val s = Files.list(dir)
       try s.anyMatch(p => p.toString.endsWith(".parquet") ||
@@ -52,9 +66,6 @@ object MergeWriter {
       finally s.close()
     }
   }
-
-  def readTarget(spark: SparkSession, path: String): Option[DataFrame] =
-    if (tableExists(path)) Some(spark.read.parquet(path)) else None
 
   /** Align `df` to the union schema: missing columns become typed nulls
     * (Delta schema autoMerge equivalent). */
@@ -72,6 +83,20 @@ object MergeWriter {
     (fromA ++ extraB).toSeq
   }
 
+  /** The merge prelude shared by [[upsert]] and [[upsertPartial]]: the
+    * key-deduplicated batch (latest by `recency` when given) and the target,
+    * both aligned to their union schema. */
+  private def aligned(target: DataFrame, batch: DataFrame, ids: Seq[String],
+      recency: Seq[String]): (Seq[(String, String)], DataFrame, DataFrame) = {
+    require(ids.nonEmpty, "merge requires at least one id column")
+    val cleanBatch =
+      if (recency.nonEmpty)
+        graft.pipeline.StageTransform.dedupLatest(batch, ids, recency, ids)
+      else batch.dropDuplicates(ids)
+    val schema = unionSchemaOf(target, cleanBatch)
+    (schema, alignTo(target, schema), alignTo(cleanBatch, schema))
+  }
+
   /** K4 — upsert: batch rows replace key-matched target rows, new keys
     * append. Batch is key-deduplicated first to satisfy the single-match rule
     * (aje-stage-dms-load.py:483-485); with `recency` given the latest batch
@@ -79,14 +104,7 @@ object MergeWriter {
     * arbitrary one). */
   def upsert(target: DataFrame, batch: DataFrame, ids: Seq[String],
       recency: Seq[String] = Nil): DataFrame = {
-    require(ids.nonEmpty, "merge requires at least one id column")
-    val cleanBatch =
-      if (recency.nonEmpty)
-        graft.pipeline.StageTransform.dedupLatest(batch, ids, recency, ids)
-      else batch.dropDuplicates(ids)
-    val schema = unionSchemaOf(target, cleanBatch)
-    val t = alignTo(target, schema)
-    val b = alignTo(cleanBatch, schema)
+    val (schema, t, b) = aligned(target, batch, ids, recency)
     // Keys present in the batch vanish from the target (anti join), then the
     // batch is appended — whenMatchedUpdateAll + whenNotMatchedInsertAll.
     // The using-column join moves join columns to the FRONT of its output;
@@ -121,14 +139,7 @@ object MergeWriter {
    */
   def upsertPartial(target: DataFrame, batch: DataFrame, ids: Seq[String],
       recency: Seq[String] = Nil): DataFrame = {
-    require(ids.nonEmpty, "merge requires at least one id column")
-    val cleanBatch =
-      if (recency.nonEmpty)
-        graft.pipeline.StageTransform.dedupLatest(batch, ids, recency, ids)
-      else batch.dropDuplicates(ids)
-    val schema = unionSchemaOf(target, cleanBatch)
-    val t = alignTo(target, schema)
-    val b = alignTo(cleanBatch, schema)
+    val (schema, t, b) = aligned(target, batch, ids, recency)
     val dataCols = schema.map(_._1).filterNot(ids.contains)
     val bren = b.select(
       ids.map(col) ++ dataCols.map(c => col(c).as(s"__b_$c")) :+
@@ -294,42 +305,42 @@ object MergeWriter {
     upsert(kept, batch, ids)
   }
 
-  /** Atomic-ish local swap write: write to `<path>.__tmp`, then replace
-    * `path`. (On a real cluster this is a cloud-storage rename / Delta
-    * transaction; the shape — never read and overwrite the same files in one
-    * job — is the part that matters.)
+  /** Whole-table write: `df` goes to `<path>.__tmp` (never read and
+    * overwrite the same files in one job), then [[publish]] swaps it in.
     *
-    * Concurrent-reader design note (what a cloud deployment changes, and
-    * nothing else): the delete-then-move window below means a reader that
-    * lists `path` mid-swap sees a missing or half-populated directory, and
-    * a long-running reader can have files deleted under its footer cache.
-    * The production fix is a COMMIT PROTOCOL, not a smarter rename — any of:
-    *  - a table format (Delta/Iceberg/Hudi): writers commit a new snapshot
-    *    (manifest of immutable files) and readers pin the snapshot they
-    *    started with — swap becomes a metadata pointer flip, old files are
-    *    vacuumed after a retention window;
-    *  - a manifest file: write data files under unique names, then
-    *    atomically replace ONE small `_manifest.json` listing the live
-    *    files; readers list via the manifest, never the directory;
-    *  - versioned directories: write `path/v=N+1/`, flip a `_latest`
-    *    pointer, garbage-collect old versions asynchronously.
-    * All three keep this writer's invariant (never read and rewrite the
-    * same files in one job) and its pruned-merge contract unchanged —
-    * [[prunedMergeWrite]]'s per-partition swap maps 1:1 onto a per-partition
-    * snapshot commit. The local-FS rename here is the harness-appropriate
-    * stand-in for that pointer flip; [[SnapshotStore]] implements the
-    * versioned-directory variant in full (atomic pointer flip, reader
-    * isolation, optimistic writer claims, vacuum) for tables that need
-    * concurrent readers. */
+    * Invariant: publish is crash-atomic. A crash or a failed attempt at any
+    * point leaves either the complete old version or the complete new one,
+    * and the next [[tableExists]] finishes or rolls back the swap. It is not
+    * reader-isolated: a reader that lists `path` during the two renames can
+    * find it missing. Tables that need concurrent readers use
+    * [[SnapshotStore]] (versioned directories, pointer flip, vacuum). */
   def writeSwap(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Long = {
     val tmp = path + ".__tmp"
     val writer = df.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(tmp)
     val rows = parquetRowCount(tmp)
-    deleteRecursive(Paths.get(path))
-    Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
+    publish(tmp, path)
     rows
+  }
+
+  /** Test hook called as `(path, step)` after each filesystem step of
+    * [[publish]]; a kill-point test throws from it. */
+  @volatile private[graft] var publishHook: (String, Int) => Unit = (_, _) => ()
+
+  /** The one swap every stage-table write ends in: rename the live `path`
+    * to `path.__old`, rename the complete `tmp` to `path`, delete
+    * `path.__old`. No step deletes live data before its replacement is in
+    * place. */
+  private def publish(tmp: String, path: String): Unit = {
+    tableExists(path) // finish or roll back an earlier interrupted publish
+    val (live, old) = (Paths.get(path), Paths.get(path + ".__old"))
+    if (Files.exists(live)) Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
+    publishHook(path, 1)
+    Files.move(Paths.get(tmp), live, StandardCopyOption.ATOMIC_MOVE)
+    publishHook(path, 2)
+    FileUtils.deleteDirectory(old.toFile)
+    publishHook(path, 3)
   }
 
   /** Row count from parquet FOOTERS only — no data pass over the freshly
@@ -354,9 +365,13 @@ object MergeWriter {
     * partition values plus any partitions matching `alsoTouched` (the
     * transactional-window delete range). Only those partitions are read —
     * the scan's PartitionFilters skip every other directory — merged via
-    * `merge`, written partitioned to a tmp dir, and swapped in per
-    * partition directory. Touched partitions that end up EMPTY after the
-    * merge (a fully deleted window period) are removed.
+    * `merge` and written partitioned to a tmp dir. Every other on-disk
+    * partition directory is hard-linked into tmp unchanged (same files,
+    * same bytes; no data is read), and [[publish]] swaps tmp in whole.
+    * Touched partitions that end up EMPTY after the merge (a fully deleted
+    * window period) are therefore gone. Data I/O is O(touched partitions);
+    * the driver adds one link per carried-over file and one unlink per
+    * file of the old version.
     *
     * Contract (the standard pruned-merge one): a row's partition values must
     * be stable under update — a key may not move between partitions, or its
@@ -378,35 +393,29 @@ object MergeWriter {
     // parsed strings are cast to the target's partition types and every
     // predicate below evaluates over that tiny local frame; keeping the
     // on-disk relative path alongside the typed values is also how touched
-    // directories are later located for deletion — matching parsed leaf
-    // dirs, never re-rendering values (Timestamp.toString and friends do
-    // not round-trip Spark's write-side partition-path formatting).
+    // directories are located — matching parsed leaf dirs, never
+    // re-rendering values (Timestamp.toString and friends do not
+    // round-trip Spark's write-side partition-path formatting).
     val dirCol = "__graft_dir"
     val diskDirs = leafPartitionDirs(Paths.get(path), partitionCols.length)
-    val diskDf: Option[DataFrame] =
-      if (diskDirs.isEmpty) None
-      else {
-        val parsed = diskDirs.map { rel =>
-          rel.toString +: rel.toString.split("/").map { seg =>
-            val raw = ExternalCatalogUtils
-              .unescapePathName(seg.substring(seg.indexOf('=') + 1))
-            if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-            else raw
-          }.toSeq
-        }
-        val strSchema = org.apache.spark.sql.types.StructType(
-          (dirCol +: partitionCols).map(c => org.apache.spark.sql.types
-            .StructField(c, org.apache.spark.sql.types.StringType, true)))
-        val typeOf = target.schema.fields.map(f => f.name -> f.dataType).toMap
-        Some(spark.createDataFrame(
-            java.util.Arrays.asList(parsed.map(Row(_: _*)): _*), strSchema)
-          .select(col(dirCol) +:
-            partitionCols.map(c => col(c).cast(typeOf(c)).as(c)): _*))
-      }
-    val extraVals = (alsoTouched, diskDf) match {
-      case (Some(p), Some(df)) => df.filter(p).select(pc: _*).collect()
-      case _ => Array.empty[Row]
+    val parsed = diskDirs.map { rel =>
+      rel.toString +: rel.toString.split("/").map { seg =>
+        val raw = ExternalCatalogUtils
+          .unescapePathName(seg.substring(seg.indexOf('=') + 1))
+        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+        else raw
+      }.toSeq
     }
+    val strSchema = org.apache.spark.sql.types.StructType(
+      (dirCol +: partitionCols).map(c => org.apache.spark.sql.types
+        .StructField(c, org.apache.spark.sql.types.StringType, true)))
+    val typeOf = target.schema.fields.map(f => f.name -> f.dataType).toMap
+    val diskDf = spark.createDataFrame(
+        java.util.Arrays.asList(parsed.map(Row(_: _*)): _*), strSchema)
+      .select(col(dirCol) +:
+        partitionCols.map(c => col(c).cast(typeOf(c)).as(c)): _*)
+    val extraVals =
+      alsoTouched.toSeq.flatMap(p => diskDf.filter(p).select(pc: _*).collect())
     val touched = (batchVals ++ extraVals).map(_.toSeq).distinct.toSeq
     if (touched.isEmpty) return 0L
 
@@ -423,22 +432,21 @@ object MergeWriter {
       .parquet(tmp)
     val rows = parquetRowCount(tmp)
 
-    // Swap per partition directory: replace every partition the tmp write
-    // produced, and delete touched partitions the merge emptied. Deletions
-    // target the actual on-disk directories whose parsed values satisfy the
-    // touched predicate — the same evaluation the scan pruned by.
+    // Carried over = every on-disk leaf dir minus those the touched
+    // predicate selects (a set difference: a NULL-valued predicate keeps a
+    // directory rather than dropping it) and those the merge wrote anew.
     val tmpRoot = Paths.get(tmp)
-    val written = leafPartitionDirs(tmpRoot, partitionCols.length)
-    val pathRoot = Paths.get(path)
-    diskDf.foreach(_.filter(pred).select(dirCol).collect()
-      .foreach(r => deleteRecursive(pathRoot.resolve(r.getString(0)))))
-    written.foreach { rel =>
-      val dest = pathRoot.resolve(rel)
-      deleteRecursive(dest) // same partition under a differently rendered name
-      Files.createDirectories(dest.getParent)
-      Files.move(tmpRoot.resolve(rel), dest, StandardCopyOption.ATOMIC_MOVE)
+    val touchedDirs = diskDf.filter(pred).select(dirCol).collect().map(_.getString(0))
+    val written = leafPartitionDirs(tmpRoot, partitionCols.length).map(_.toString)
+    val keep = diskDirs.map(_.toString).filterNot((touchedDirs ++ written).toSet)
+    for (rel <- keep) {
+      val dest = Files.createDirectories(tmpRoot.resolve(rel))
+      val s = Files.list(Paths.get(path).resolve(rel))
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .foreach(f => Files.createLink(dest.resolve(f.getFileName), f))
+      finally s.close()
     }
-    deleteRecursive(tmpRoot)
+    publish(tmp, path)
     rows
   }
 
@@ -463,20 +471,10 @@ object MergeWriter {
     * partition-pruned scan and pruned merge would stop pruning. */
   def compact(spark: SparkSession, path: String, target: Int = 1,
       partitionCols: Seq[String] = Nil): Long = {
-    val df = spark.read.parquet(path)
-    if (partitionCols.isEmpty) writeSwap(df.repartition(target), path)
-    else writeSwap(
-      df.repartition(target, partitionCols.map(col): _*),
-      path, partitionCols)
+    // no partition columns: a round-robin repartition into `target` files
+    writeSwap(spark.read.parquet(path)
+      .repartition(target, partitionCols.map(col): _*), path, partitionCols)
   }
-
-  private def deleteRecursive(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
 
   /** I5 — retry combinator: 3 attempts, backoff attempt*60s in the reference
     * (aje-stage-dms-load.py:467-503); delay injectable for tests. */
@@ -519,40 +517,34 @@ object MergeWriter {
     // raises from the non-retried branch, aje-stage-dms-load.py:512-518;
     // inside a retry it would "succeed" second time around against the
     // just-bootstrapped empty table).
-    if (readTarget(spark, path).isEmpty && batch.isEmpty) {
+    if (!tableExists(path) && batch.isEmpty) {
       writeSwap(batch, path, partitionCols)
       throw new NoDataToMigrateException
     }
+    // One route per load mode: its name, merge function and the deleted
+    // window (extra touched partitions: periods the batch has no
+    // replacement rows for must still be emptied).
+    type Merge = (DataFrame, DataFrame) => DataFrame
+    val (name, merge, window) = mode match {
+      case LoadMode.FullOverwrite => ("overwrite", None, None)
+      case LoadMode.IncrementalMerge =>
+        ("merge", Some[Merge](upsert(_, _, ids)), None)
+      case LoadMode.TransactionalWindowMerge(_) =>
+        ("window-merge",
+          Some[Merge](transactionalWindowMerge(_, _, ids, cutoffPeriod)),
+          Some(col("processperiod").cast("int") >= cutoffPeriod))
+    }
+    val stable = partitionStable || partitionCols.forall(ids.contains) ||
+      (window.isDefined && partitionCols == Seq("processperiod"))
+    val pruned = partitionCols.nonEmpty && stable &&
+      (window.isEmpty || partitionCols.contains("processperiod"))
     withRetry(3, retrySleepMs) {
-      val existing = readTarget(spark, path)
-      def stableFor(mergeIds: Seq[String]): Boolean =
-        partitionStable || partitionCols.forall(mergeIds.contains)
-      def pruned(mergeIds: Seq[String]): Boolean =
-        partitionCols.nonEmpty && existing.isDefined && stableFor(mergeIds)
-      (existing, mode) match {
-        case (Some(_), LoadMode.IncrementalMerge) if pruned(ids) =>
-          MergeStats("merge-pruned", prunedMergeWrite(spark, batch, path,
-            partitionCols, None, upsert(_, _, ids)))
-        case (Some(t), LoadMode.IncrementalMerge) =>
-          MergeStats("merge", writeSwap(upsert(t, batch, ids), path, partitionCols))
-        case (Some(_), LoadMode.TransactionalWindowMerge(_))
-            if partitionCols.contains("processperiod")
-              && (stableFor(ids) || partitionCols == Seq("processperiod")) =>
-          // deleted window = extra touched partitions (periods the batch has
-          // no replacement rows for must still be emptied)
-          MergeStats("window-merge-pruned", prunedMergeWrite(spark, batch, path,
-            partitionCols, Some(col("processperiod").cast("int") >= cutoffPeriod),
-            transactionalWindowMerge(_, _, ids, cutoffPeriod)))
-        case (Some(t), LoadMode.TransactionalWindowMerge(_)) =>
-          MergeStats("window-merge", writeSwap(
-            transactionalWindowMerge(t, batch, ids, cutoffPeriod), path, partitionCols))
-        case (Some(_), LoadMode.Upsert(key)) if pruned(Seq(key)) =>
-          MergeStats("upsert-pruned", prunedMergeWrite(spark, batch, path,
-            partitionCols, None, upsert(_, _, Seq(key))))
-        case (Some(t), LoadMode.Upsert(key)) =>
-          MergeStats("upsert", writeSwap(upsert(t, batch, Seq(key)), path, partitionCols))
-        case _ => // FullOverwrite, Snapshot, or first write of any mode
-          MergeStats("overwrite", writeSwap(batch, path, partitionCols))
+      (merge, tableExists(path)) match {
+        case (Some(m), true) if pruned => MergeStats(s"$name-pruned",
+          prunedMergeWrite(spark, batch, path, partitionCols, window, m))
+        case (Some(m), true) => MergeStats(name,
+          writeSwap(m(spark.read.parquet(path), batch), path, partitionCols))
+        case _ => MergeStats("overwrite", writeSwap(batch, path, partitionCols))
       }
     }
   }

@@ -1,17 +1,18 @@
 package graft.write
 
 import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * Snapshot-committed tables: the commit protocol [[MergeWriter.writeSwap]]'s
- * scaladoc design note describes, implemented (versioned-directory variant).
+ * Snapshot-committed tables: versioned directories with reader isolation,
+ * tags and time travel.
  *
- * [[MergeWriter.writeSwap]]'s delete-then-move swap has a window where a
- * concurrent reader sees a missing or half-populated directory, and a
- * long-running reader can have files deleted under its footer cache. Here a
- * writer never touches live data:
+ * [[MergeWriter.writeSwap]]'s publish is crash-atomic but not
+ * reader-isolated: a concurrent reader that lists the table during its two
+ * renames can find it missing, and a long-running reader can have files
+ * deleted under its footer cache. Here a writer never touches live data:
  *
  *  - data is written into a uniquely-named STAGING directory, then the
  *    whole directory is atomically RENAMED to `root/_v<N>/` — the rename is
@@ -224,7 +225,8 @@ object SnapshotStore {
         flip(rootP, root, v)
         return v
       }
-      deleteRecursive(staging) // lost the race: this plan missed a commit
+      // lost the race: this plan missed a commit
+      FileUtils.deleteDirectory(staging.toFile)
       attempt += 1
     }
     throw new IllegalStateException(
@@ -246,10 +248,10 @@ object SnapshotStore {
     val victims = (0L to latest - keep)
       .filterNot(pinned)
       .map(versionDir(rootP, _)).filter(Files.isDirectory(_))
-    victims.foreach(deleteRecursive)
+    victims.foreach(v => FileUtils.deleteDirectory(v.toFile))
     val s = Files.list(rootP)
     try s.filter(p => p.getFileName.toString.startsWith(".staging-"))
-      .forEach(deleteRecursive)
+      .forEach(p => FileUtils.deleteDirectory(p.toFile))
     finally s.close()
     victims.size
   }
@@ -330,12 +332,4 @@ object SnapshotStore {
           cur.join(dels, keys, "left_anti"), ups, keys, Nil)
     }, partitionCols)
   }
-
-  private def deleteRecursive(p: JPath): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
 }

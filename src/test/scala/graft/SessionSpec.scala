@@ -45,4 +45,23 @@ class SessionSpec extends SparkSpec {
     // for sessions a platform creates
     assert(builders == Set("GraftSession.scala", "ExtensionsSpec.scala"))
   }
+
+  test("renames publish only in the write layer; one recursive delete") {
+    val files = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> code(Files.readString(p))).toSeq
+    assert(files.size > 50, "source tree not found from the working dir")
+    val movers = files.filter(_._2.contains("Files.move(")).map(_._1).toSet
+    assert(movers.subsetOf(
+      Set("MergeWriter.scala", "SnapshotStore.scala", "ResultCache.scala")),
+      movers)
+    // a helper named for recursive deletion, or the walk-then-delete-
+    // deepest-first idiom: commons-io FileUtils is the one implementation
+    val helper = """def\s+(?:rm|delete|remove)\w*(?:Recursive|Tree|Dir)\w*""".r
+    val idiom = """(?s)walk\(.{0,200}?reverseOrder""".r
+    val own = files.filter { case (_, src) =>
+      helper.findFirstIn(src).isDefined || idiom.findFirstIn(src).isDefined
+    }.map(_._1)
+    assert(own.isEmpty, s"own recursive-delete helpers: $own")
+  }
 }
