@@ -51,21 +51,23 @@ final class IngestOrchestrator(
         cutoff, retrySleepMs = retrySleepMs,
         partitionStable = t.partitionStable)
       // the reference re-runs its catalog crawler after stage loads
-      // (crawlers_job.py); here: registration + partition recovery per
-      // table, then the statistics feed — the crawler analog computes
-      // stats in the same pass, so every registered stage table carries
-      // rowCount/size plus NDV/min/max on its merge keys and the PLANNER
-      // (CBO broadcast decisions, join reorder) sees them without any
-      // caller having to remember a separate ANALYZE step.
+      // (crawlers_job.py); here an incremental analog per table: a
+      // disk-vs-catalog registration diff, then statistics from the
+      // footers and the write itself — rowCount/size plus NDV/min/max on
+      // the merge keys, so the PLANNER (CBO broadcast decisions, join
+      // reorder) sees them. The keys' distinct counts were observed in a
+      // whole-table write, or are rows - nulls of a single deduplicated
+      // key; only otherwise (a composite key on a pruned route) does a
+      // full-scan ANALYZE run.
       registerIn.foreach { db =>
+        val path = s"$stageRoot/${t.stageTableName}"
         graft.write.CatalogRegistry.registerStage(
-          spark, db, t.stageTableName, s"$stageRoot/${t.stageTableName}",
-          partitions)
+          spark, db, t.stageTableName, path, partitions)
         // only ids that survived the transform: a quarantined id column
-        // is a WARNING, and a failed ANALYZE must not escalate it
-        graft.write.CatalogRegistry.analyzeStage(
-          spark, db, t.stageTableName,
-          ids.filter(result.df.columns.contains))
+        // is a WARNING, and a failed statistics step must not escalate it
+        graft.write.CatalogRegistry.refreshStats(spark, db, t.stageTableName,
+          path, ids.filter(result.df.columns.contains), stats.distinctCounts,
+          keyUnique = result.keyUnique)
       }
       (result, stats)
     } match {

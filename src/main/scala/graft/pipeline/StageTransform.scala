@@ -26,7 +26,10 @@ import graft.meta.ColumnSpec
  */
 object StageTransform {
 
-  final case class Result(df: DataFrame, quarantined: Seq[(String, String)]) {
+  /** `keyUnique`: the frame holds one row per id key (the ids were
+    * deduplicated by recency). */
+  final case class Result(df: DataFrame, quarantined: Seq[(String, String)],
+      keyUnique: Boolean = false) {
     def quarantinedColumns: Seq[String] = quarantined.map(_._1)
   }
 
@@ -98,11 +101,12 @@ object StageTransform {
       transformed.quarantinedColumns.contains(s.columnName))
     val ids = live.filter(_.isId).map(_.columnName)
     val recency = live.filter(_.isFilterDate).map(_.columnName)
+    val dedup = ids.nonEmpty && recency.nonEmpty
     val deduped =
-      if (ids.nonEmpty) dedupLatest(transformed.df, ids, recency, ids)
+      if (dedup) dedupLatest(transformed.df, ids, recency, ids)
       else transformed.df
     Result(orderedProjection(deduped, specs,
-      transformed.quarantinedColumns, globalSort), transformed.quarantined)
+      transformed.quarantinedColumns, globalSort), transformed.quarantined, dedup)
   }
 
   /** S5 — shift every TimestampType column UTC->Lima (-5h), as the Salesforce
@@ -112,9 +116,4 @@ object StageTransform {
       (acc, f) =>
         acc.withColumn(f.name, col(f.name) + expr(s"INTERVAL $hours HOURS"))
     }
-
-  /** S4 — gzipped-CSV raw-zone scan with header
-    * (aje-stage-dms-load.py:377; codec auto-detected from extension). */
-  def readRawCsv(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
 }

@@ -3,10 +3,7 @@ package graft.write
 import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.commons.io.FileUtils
-import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import graft.meta.LoadMode
@@ -47,7 +44,13 @@ object MergeWriter {
   final class NoDataToMigrateException
       extends Exception("no data detected to migrate")
 
-  final case class MergeStats(mode: String, rowsWritten: Long)
+  /** What one [[write]] did: its route, the rows it wrote and, on the
+    * routes that write the whole table ([[writeSwap]]), the distinct count
+    * of each id column observed inside the write job — ANALYZE's estimator
+    * at its relative error, so [[CatalogRegistry.refreshStats]] can store
+    * it without scanning the table again. */
+  final case class MergeStats(mode: String, rowsWritten: Long,
+      distinctCounts: Map[String, Long] = Map.empty)
 
   /** Whether a stage table is present at `path` — the one existence check
     * [[write]] and the streaming sinks route on. Rolls back a publish a
@@ -84,24 +87,21 @@ object MergeWriter {
   }
 
   /** The merge prelude shared by [[upsert]] and [[upsertPartial]]: the
-    * key-deduplicated batch (latest by `recency` when given) and the target,
-    * both aligned to their union schema. */
+    * batch deterministically key-deduplicated ([[dedupDeterministic]]) and
+    * the target, both aligned to their union schema. */
   private def aligned(target: DataFrame, batch: DataFrame, ids: Seq[String],
       recency: Seq[String]): (Seq[(String, String)], DataFrame, DataFrame) = {
     require(ids.nonEmpty, "merge requires at least one id column")
-    val cleanBatch =
-      if (recency.nonEmpty)
-        graft.pipeline.StageTransform.dedupLatest(batch, ids, recency, ids)
-      else batch.dropDuplicates(ids)
+    val cleanBatch = dedupDeterministic(batch, ids, recency)
     val schema = unionSchemaOf(target, cleanBatch)
     (schema, alignTo(target, schema), alignTo(cleanBatch, schema))
   }
 
   /** K4 — upsert: batch rows replace key-matched target rows, new keys
     * append. Batch is key-deduplicated first to satisfy the single-match rule
-    * (aje-stage-dms-load.py:483-485); with `recency` given the latest batch
-    * row wins deterministically (the reference's bare dropDuplicates keeps an
-    * arbitrary one). */
+    * (aje-stage-dms-load.py:483-485), deterministically: the latest row by
+    * `recency` when given, else the max over the data columns (the
+    * reference's bare dropDuplicates keeps an arbitrary one). */
   def upsert(target: DataFrame, batch: DataFrame, ids: Seq[String],
       recency: Seq[String] = Nil): DataFrame = {
     val (schema, t, b) = aligned(target, batch, ids, recency)
@@ -257,8 +257,9 @@ object MergeWriter {
     hist.select(order.map(col): _*).union(merged)
   }
 
-  /** Deterministic key-dedup shared by [[scd2Merge]] and the scd2Sink
-    * bootstrap: latest-by-`recency` per key, falling back to the max over
+  /** Deterministic key-dedup shared by the merges ([[upsert]],
+    * [[upsertPartial]], [[scd2Merge]]) and the scd2Sink bootstrap:
+    * latest-by-`recency` per key, falling back to the max over
     * all non-id columns — never an arbitrary survivor, so replayed batches
     * pick the same row. */
   private[graft] def dedupDeterministic(batch: DataFrame, ids: Seq[String],
@@ -314,14 +315,35 @@ object MergeWriter {
     * reader-isolated: a reader that lists `path` during the two renames can
     * find it missing. Tables that need concurrent readers use
     * [[SnapshotStore]] (versioned directories, pointer flip, vacuum). */
-  def writeSwap(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Long = {
+  def writeSwap(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Long =
+    observedSwap(df, path, partitionCols, Nil)._1
+
+  /** [[writeSwap]] that also returns the distinct count of each of
+    * `ndvCols`, observed inside the write job (`Dataset.observe`, no extra
+    * job) with `approx_count_distinct` at `spark.sql.statistics.ndv.maxError`
+    * — the estimator and relative error `ANALYZE ... FOR COLUMNS` uses, so
+    * over the same rows the value is ANALYZE's. The frame written is the
+    * whole table. Each call (each retry attempt) uses a fresh Observation;
+    * metrics that have not arrived a minute after the write give no counts
+    * (the catalog then falls back), never a hung write. */
+  private def observedSwap(df: DataFrame, path: String, partitionCols: Seq[String],
+      ndvCols: Seq[String]): (Long, Map[String, Long]) = {
+    val cols = ndvCols.filter(df.columns.contains)
+    val obs = Observation()
+    val rsd = df.sparkSession.conf.get("spark.sql.statistics.ndv.maxError").toDouble
+    val ndv = cols.map(c => approx_count_distinct(col(c), rsd).as(c))
+    val observed = if (cols.isEmpty) df else df.observe(obs, ndv.head, ndv.tail: _*)
     val tmp = path + ".__tmp"
-    val writer = df.write.mode(SaveMode.Overwrite)
+    val writer = observed.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(tmp)
-    val rows = parquetRowCount(tmp)
     publish(tmp, path)
-    rows
+    val rows = ParquetFooters.of(path).values.map(_.rows).sum
+    val counts =
+      if (cols.isEmpty) None
+      else scala.util.Try(scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(1, "minute"))).toOption
+    (rows, counts.fold(Map.empty[String, Long])(_.getValuesMap[Long](cols)))
   }
 
   /** Test hook called as `(path, step)` after each filesystem step of
@@ -341,23 +363,6 @@ object MergeWriter {
     publishHook(path, 2)
     FileUtils.deleteDirectory(old.toFile)
     publishHook(path, 3)
-  }
-
-  /** Row count from parquet FOOTERS only — no data pass over the freshly
-    * written files (each footer carries the exact record count). Driver-side
-    * listing is fine here: this writer is explicitly the local-FS analog; a
-    * cloud deployment would sum the commit protocol's task metrics instead. */
-  private def parquetRowCount(dir: String): Long = {
-    val conf = new Configuration()
-    val s = Files.walk(Paths.get(dir))
-    try s.iterator().asScala
-      .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
-      .map { p =>
-        val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toUri), conf))
-        try r.getRecordCount finally r.close()
-      }.sum
-    finally s.close()
   }
 
   /** Partition-pruned merge-and-swap (Delta file-pruning analog,
@@ -430,7 +435,6 @@ object MergeWriter {
     val tmp = path + ".__tmp"
     merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
       .parquet(tmp)
-    val rows = parquetRowCount(tmp)
 
     // Carried over = every on-disk leaf dir minus those the touched
     // predicate selects (a set difference: a NULL-valued predicate keeps a
@@ -447,11 +451,15 @@ object MergeWriter {
       finally s.close()
     }
     publish(tmp, path)
-    rows
+    // rows written = the files of the partitions the merge wrote
+    ParquetFooters.of(path).collect { case (rel, f)
+      if Option(Paths.get(rel).getParent).exists(d => written.contains(d.toString)) =>
+        f.rows
+    }.sum
   }
 
   /** Relative paths of the depth-`n` partition directories under `root`. */
-  private def leafPartitionDirs(root: JPath, n: Int): Seq[JPath] = {
+  private[write] def leafPartitionDirs(root: JPath, n: Int): Seq[JPath] = {
     val s = Files.walk(root, n)
     try s.iterator().asScala
       .filter(p => root.relativize(p).getNameCount == n && Files.isDirectory(p)
@@ -538,13 +546,16 @@ object MergeWriter {
       (window.isDefined && partitionCols == Seq("processperiod"))
     val pruned = partitionCols.nonEmpty && stable &&
       (window.isEmpty || partitionCols.contains("processperiod"))
+    def swapStats(route: String, table: DataFrame): MergeStats = {
+      val (rows, ndv) = observedSwap(table, path, partitionCols, ids)
+      MergeStats(route, rows, ndv)
+    }
     withRetry(3, retrySleepMs) {
       (merge, tableExists(path)) match {
         case (Some(m), true) if pruned => MergeStats(s"$name-pruned",
           prunedMergeWrite(spark, batch, path, partitionCols, window, m))
-        case (Some(m), true) => MergeStats(name,
-          writeSwap(m(spark.read.parquet(path), batch), path, partitionCols))
-        case _ => MergeStats("overwrite", writeSwap(batch, path, partitionCols))
+        case (Some(m), true) => swapStats(name, m(spark.read.parquet(path), batch))
+        case _ => swapStats("overwrite", batch)
       }
     }
   }

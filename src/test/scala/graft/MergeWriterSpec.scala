@@ -40,6 +40,25 @@ class MergeWriterSpec extends SparkSpec {
     assert(again == got)
   }
 
+  test("upsert and upsertPartial without recency keep the max over data " +
+      "columns per batch key, under any shuffle partition count") {
+    val target = Seq((1, "a", 1), (2, "b", 2)).toDF("id", "v", "n")
+    // two images of key 1 (v decides) and of key 3 (v ties, n decides)
+    val batch = Seq((1, "x", 5), (1, "y", 0), (3, "c", 9), (3, "c", 1))
+      .toDF("id", "v", "n")
+    val want = Set((1, "y", 0), (2, "b", 2), (3, "c", 9))
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (parts <- Seq(1, 8); reversed <- Seq(false, true)) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val b = if (reversed) batch.orderBy($"n".asc) else batch
+      for ((name, merged) <- Seq(
+          "upsert" -> MergeWriter.upsert(target, b, Seq("id")),
+          "upsertPartial" -> MergeWriter.upsertPartial(target, b, Seq("id"))))
+        assert(merged.as[(Int, String, Int)].collect().toSet == want,
+          s"$name, $parts shuffle partitions")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  }
+
   test("upsert: schema evolution fills nulls on the old side") {
     val target = Seq((1, "a")).toDF("id", "v")
     val batch = Seq((2, "b", 9)).toDF("id", "v", "extra")

@@ -46,11 +46,17 @@ class SessionSpec extends SparkSpec {
     assert(builders == Set("GraftSession.scala", "ExtensionsSpec.scala"))
   }
 
-  test("renames publish only in the write layer; one recursive delete") {
+  /** (file name, code without comments) of every source under src/main. */
+  private lazy val mainSources: Seq[(String, String)] = {
     val files = Files.walk(Paths.get("src/main")).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => p.getFileName.toString -> code(Files.readString(p))).toSeq
     assert(files.size > 50, "source tree not found from the working dir")
+    files
+  }
+
+  test("renames publish only in the write layer; one recursive delete") {
+    val files = mainSources
     val movers = files.filter(_._2.contains("Files.move(")).map(_._1).toSet
     assert(movers.subsetOf(
       Set("MergeWriter.scala", "SnapshotStore.scala", "ResultCache.scala")),
@@ -63,5 +69,18 @@ class SessionSpec extends SparkSpec {
       helper.findFirstIn(src).isDefined || idiom.findFirstIn(src).isDefined
     }.map(_._1)
     assert(own.isEmpty, s"own recursive-delete helpers: $own")
+  }
+
+  test("catalog statistics and parquet footers have one home each") {
+    val files = mainSources
+    def holders(pattern: String): Set[String] =
+      files.filter(f => pattern.r.findFirstIn(f._2).isDefined).map(_._1).toSet
+    // full-scan ANALYZE, MSCK and hand-written statistics only in the
+    // catalog layer, where the write-derived statistics step owns them
+    for (p <- Seq("""ANALYZE\s+TABLE""", """MSCK\s+REPAIR""", "alterTableStats"))
+      assert(holders(p).subsetOf(Set("CatalogRegistry.scala")), s"$p: ${holders(p)}")
+    // one footer reader, shared by the writer and the catalog (its cache is
+    // what keeps a warm day's footer reads to the new files)
+    assert(holders("""ParquetFileReader\s*\.\s*open""") == Set("ParquetFooters.scala"))
   }
 }
