@@ -17,7 +17,6 @@ import graft.catalog.DslQueries._
 private[graft] object PipelineQueries {
   val entries: Seq[(String, Q, Option[String])] = Seq(
 
-    // W1 — windowed latest-row dedup (deterministic tie-break on event_id)
     // Telemetry debounce: an event repeating its (user, type) key within
     // 5 s of the PREVIOUS occurrence is a client-side duplicate — the
     // lag-window suppression every clickstream ingest runs before
@@ -48,9 +47,15 @@ private[graft] object PipelineQueries {
             THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped
         FROM g GROUP BY 1""")),
 
+    // W1 — latest row per user with the pinned order ts DESC, event_id ASC
+    // (the stage rule, StageTransform.dedupLatest, breaks ties by every
+    // other column descending instead; the window is spelled out here so
+    // the oracle's order stays exact)
     ("q_dedup_latest",
-      (s: SparkSession, d: String) => StageTransform.dedupLatest(
-          t(s, d, "events"), Seq("user_id"), Seq("ts"), Seq("event_id"))
+      (s: SparkSession, d: String) => t(s, d, "events")
+        .withColumn("__rn", row_number().over(Window.partitionBy("user_id")
+          .orderBy(col("ts").desc, col("event_id").asc)))
+        .filter(col("__rn") === 1)
         .select(col("user_id"), col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_str"),
           col("event_type")),

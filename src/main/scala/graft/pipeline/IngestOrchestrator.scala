@@ -46,10 +46,13 @@ final class IngestOrchestrator(
       val partitions = specs.filter(_.isPartition).map(_.columnName)
       val ids = specs.filter(_.isId).map(_.columnName)
       val cutoff = currentCutoff(t)
+      // the merge deduplicates the batch by the recency the transform used
+      // (live columns only: a quarantined one would fail the write), which
+      // reuses the transform's window instead of sorting again
       val stats = MergeWriter.write(spark, result.df,
         s"$stageRoot/${t.stageTableName}", LoadMode.of(t), ids, partitions,
         cutoff, retrySleepMs = retrySleepMs,
-        partitionStable = t.partitionStable)
+        partitionStable = t.partitionStable, recency = result.recency)
       // the reference re-runs its catalog crawler after stage loads
       // (crawlers_job.py); here an incremental analog per table: a
       // disk-vs-catalog registration diff, then statistics from the
@@ -67,7 +70,7 @@ final class IngestOrchestrator(
         // is a WARNING, and a failed statistics step must not escalate it
         graft.write.CatalogRegistry.refreshStats(spark, db, t.stageTableName,
           path, ids.filter(result.df.columns.contains), stats.distinctCounts,
-          keyUnique = result.keyUnique)
+          keyUnique = result.recency.nonEmpty)
       }
       (result, stats)
     } match {

@@ -1,10 +1,10 @@
 package graft.pipeline
 
 import scala.util.{Failure, Success, Try}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import graft.functions.Transforms
 import graft.meta.ColumnSpec
 
@@ -14,22 +14,24 @@ import graft.meta.ColumnSpec
  * artifacts/stage/salesforce/jobs/transform_light.py:317-384):
  *
  *   read raw -> per-column DSL transform (with error quarantine)
- *            -> windowed latest-row dedup -> ordered projection.
+ *            -> COLUMN_ID-order projection -> latest-row-per-key dedup.
  *
  * Scale notes (100 TB): every step here is a narrow projection except the
  * dedup, which shuffles once on the id columns — that is the minimum possible
  * (latest-per-key requires co-locating keys). All transforms compile to
  * built-in expressions, so they run inside WholeStageCodegen and column
- * pruning still reaches the scan. The final global `orderBy` of the reference
- * is a full-sort anti-pattern at scale; it is opt-in here (off by default) —
- * parquet output does not need a total order.
+ * pruning still reaches the scan. The stage output is never globally sorted:
+ * the reference's final `orderBy` on the ORDER_BY columns is a full-sort
+ * anti-pattern at scale and parquet output does not need a total order, so
+ * `ColumnSpec.isOrderBy` is kept as metadata only.
  */
 object StageTransform {
 
-  /** `keyUnique`: the frame holds one row per id key (the ids were
-    * deduplicated by recency). */
+  /** `recency`: the filter-date columns the ids were deduplicated by
+    * ([[dedupLatest]]), empty when the frame was not deduplicated. A
+    * non-empty `recency` means the frame holds one row per id key. */
   final case class Result(df: DataFrame, quarantined: Seq[(String, String)],
-      keyUnique: Boolean = false) {
+      recency: Seq[String] = Nil) {
     def quarantinedColumns: Seq[String] = quarantined.map(_._1)
   }
 
@@ -58,62 +60,62 @@ object StageTransform {
     Result(df, bad.result())
   }
 
-  /** W1 — keep the latest row per key by recency column(s)
-    * (aje-stage-dms-load.py:443-456). `tieBreakers` columns (ascending) make
-    * the result deterministic when recency ties — the reference's bare
-    * `row_number` is nondeterministic on ties, a documented divergence (also
-    * replaces the Salesforce job's order-then-dropDuplicates W2,
-    * transform_light.py:394-395, which relies on unguaranteed ordering).
+  /** W1/W2 — the one latest-row-per-key rule of the ingest and merge code
+    * (aje-stage-dms-load.py:443-456, and the dedup before its MERGE,
+    * :483-485): per `ids` key keep the first row ordered by `recency`
+    * descending, then by every other non-id column descending — so a
+    * recency tie (or no recency at all) keeps the max over the remaining
+    * columns, never an arbitrary survivor, and a replayed batch picks the
+    * same row. The reference's bare `row_number` and the Salesforce job's
+    * order-then-dropDuplicates (transform_light.py:394-395) are
+    * nondeterministic on ties, a documented divergence.
     *
-    * One shuffle on `ids`; at scale prefer writing the stage table bucketed by
-    * the same ids so repeated loads reuse the partitioning. */
-  def dedupLatest(df: DataFrame, ids: Seq[String], recency: Seq[String],
-      tieBreakers: Seq[String] = Nil): DataFrame = {
-    if (recency.isEmpty) df
+    * Map-typed columns (also inside structs and arrays) cannot be ordered
+    * and take no part in the order; a frame with nothing to order by holds
+    * only key columns, whose duplicates are identical, and falls back to
+    * `dropDuplicates(ids)`. One shuffle on `ids`; a second call with the
+    * same `ids` and `recency` over the output adds neither a sort nor an
+    * exchange, because the window's partitioning and order carry through. */
+  def dedupLatest(df: DataFrame, ids: Seq[String],
+      recency: Seq[String]): DataFrame = {
+    def hasMap(dt: DataType): Boolean = dt match {
+      case _: MapType => true
+      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
+      case a: ArrayType => hasMap(a.elementType)
+      case _ => false
+    }
+    val rest = df.schema.fields.toSeq.collect {
+      case f if !ids.contains(f.name) && !recency.contains(f.name) &&
+        !hasMap(f.dataType) => f.name
+    }
+    val order = recency ++ rest
+    if (order.isEmpty) df.dropDuplicates(ids)
     else {
-      val order: Seq[Column] =
-        recency.map(col(_).desc) ++ tieBreakers.map(col(_).asc)
-      val w = Window.partitionBy(ids.map(col): _*).orderBy(order: _*)
+      val w = Window.partitionBy(ids.map(col): _*)
+        .orderBy(order.map(col(_).desc): _*)
       df.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .drop("__rn")
     }
   }
 
-  /** P1 — final projection in COLUMN_ID order, optional global sort
-    * (aje-stage-dms-load.py:459-464). Quarantined columns are excluded, as in
-    * the reference (they were never appended to `columns_order`). */
-  def orderedProjection(df: DataFrame, specs: Seq[ColumnSpec],
-      exclude: Seq[String] = Nil, globalSort: Boolean = false): DataFrame = {
-    val keep = specs.filterNot(s => exclude.contains(s.columnName))
-      .sortBy(_.columnId).map(s => col(s.columnName.trim))
-    val projected = df.select(keep: _*)
-    val orderCols = specs.filter(_.isOrderBy).map(s => col(s.columnName))
-    if (globalSort && orderCols.nonEmpty) projected.orderBy(orderCols: _*)
-    else projected
-  }
-
-  /** Full pipeline for one table's specs over an already-read raw frame. */
-  def run(raw: DataFrame, specs: Seq[ColumnSpec],
-      globalSort: Boolean = false): Result = {
+  /** Full pipeline for one table's specs over an already-read raw frame:
+    * the live specs' columns in `COLUMN_ID` order (quarantined columns are
+    * excluded, as in the reference, where they never join `columns_order`;
+    * aje-stage-dms-load.py:459-464), then, when live id and filter-date
+    * columns exist, [[dedupLatest]] over that projection — raw columns
+    * never become sort keys. */
+  def run(raw: DataFrame, specs: Seq[ColumnSpec]): Result = {
     val transformed = applySpecs(raw, specs)
     val live = specs.filterNot(s =>
       transformed.quarantinedColumns.contains(s.columnName))
+    val projected = transformed.df.select(
+      live.sortBy(_.columnId).map(s => col(s.columnName.trim)): _*)
     val ids = live.filter(_.isId).map(_.columnName)
-    val recency = live.filter(_.isFilterDate).map(_.columnName)
-    val dedup = ids.nonEmpty && recency.nonEmpty
+    val recency =
+      if (ids.isEmpty) Nil else live.filter(_.isFilterDate).map(_.columnName)
     val deduped =
-      if (dedup) dedupLatest(transformed.df, ids, recency, ids)
-      else transformed.df
-    Result(orderedProjection(deduped, specs,
-      transformed.quarantinedColumns, globalSort), transformed.quarantined, dedup)
+      if (recency.isEmpty) projected else dedupLatest(projected, ids, recency)
+    Result(deduped, transformed.quarantined, recency)
   }
-
-  /** S5 — shift every TimestampType column UTC->Lima (-5h), as the Salesforce
-    * raw read does (extract_salesforce_to_raw.py:105-118). */
-  def shiftTimestamps(df: DataFrame, hours: Int = -5): DataFrame =
-    df.schema.fields.filter(_.dataType == TimestampType).foldLeft(df) {
-      (acc, f) =>
-        acc.withColumn(f.name, col(f.name) + expr(s"INTERVAL $hours HOURS"))
-    }
 }

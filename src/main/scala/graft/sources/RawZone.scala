@@ -55,13 +55,16 @@ object RawZone {
     } catch { case _: Exception => spark.emptyDataFrame }
 
   /** S5 — shift every TimestampType column by -`hours` (UTC -> Lima wall
-    * clock in the reference). A single fold of codegen'd column arithmetic —
-    * no extra pass over the data. */
+    * clock in the reference, extract_salesforce_to_raw.py:105-118). One
+    * projection of codegen'd column arithmetic, column order unchanged — no
+    * extra pass over the data. */
   def shiftTimestamps(df: DataFrame, hours: Int = 5): DataFrame =
-    df.schema.fields.filter(_.dataType == TimestampType).foldLeft(df) {
-      (acc, f) =>
-        acc.withColumn(f.name, col(f.name) - expr(s"INTERVAL $hours HOURS"))
-    }
+    df.select(df.schema.fields.toSeq.map { f =>
+      val c = col(s"`${f.name.replace("`", "``")}`")
+      if (f.dataType == TimestampType)
+        (c - expr(s"INTERVAL $hours HOURS")).as(f.name)
+      else c
+    }: _*)
 
   /** K1/K2 — gzipped-CSV write with header. `overwrite=false` is the raw-zone
     * append accumulation (K1); `overwrite=true` collapses the reference's

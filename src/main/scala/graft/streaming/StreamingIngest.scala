@@ -582,23 +582,8 @@ object StreamingIngest {
       checkpoint: String, recency: Seq[String] = Nil,
       vacuumEvery: Int = 10, keep: Int = 3)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.write.SnapshotStore.commitMerge(batch.sparkSession, root,
-            {
-              case Some(cur) =>
-                graft.write.MergeWriter.upsert(cur, batch, ids, recency)
-              case None =>
-                graft.write.MergeWriter.dedupDeterministic(batch, ids, recency)
-            })
-          if (vacuumEvery > 0 && batchId % vacuumEvery == vacuumEvery - 1)
-            graft.write.SnapshotStore.vacuum(root, keep)
-          ()
-        }
-      }
-      .start()
+    snapshotSink(stream, root, ids, checkpoint, recency, vacuumEvery, keep,
+      graft.write.MergeWriter.upsert)
 
   /**
    * Sparse-CDC stream into a snapshot-committed table: each micro-batch
@@ -615,19 +600,27 @@ object StreamingIngest {
       checkpoint: String, recency: Seq[String] = Nil,
       vacuumEvery: Int = 10, keep: Int = 3)
       : org.apache.spark.sql.streaming.StreamingQuery =
+    snapshotSink(stream, root, ids, checkpoint, recency, vacuumEvery, keep,
+      graft.write.MergeWriter.upsertPartial)
+
+  /** The body of [[snapshotMergeSink]] and [[partialMergeSink]]: each
+    * non-empty micro-batch commits `merge(current, batch, ids, recency)`
+    * through `SnapshotStore.commitMerge`, the first one the batch
+    * deduplicated by `StageTransform.dedupLatest`, with a vacuum every
+    * `vacuumEvery` batches. */
+  private def snapshotSink(stream: DataFrame, root: String, ids: Seq[String],
+      checkpoint: String, recency: Seq[String], vacuumEvery: Int, keep: Int,
+      merge: (DataFrame, DataFrame, Seq[String], Seq[String]) => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          graft.write.SnapshotStore.commitMerge(batch.sparkSession, root,
-            {
-              case Some(cur) =>
-                graft.write.MergeWriter.upsertPartial(cur, batch, ids,
-                  recency)
-              case None =>
-                graft.write.MergeWriter.dedupDeterministic(batch, ids,
-                  recency)
-            })
+          graft.write.SnapshotStore.commitMerge(batch.sparkSession, root, {
+            case Some(cur) => merge(cur, batch, ids, recency)
+            case None =>
+              graft.pipeline.StageTransform.dedupLatest(batch, ids, recency)
+          })
           if (vacuumEvery > 0 && batchId % vacuumEvery == vacuumEvery - 1)
             graft.write.SnapshotStore.vacuum(root, keep)
           ()
@@ -702,8 +695,11 @@ object StreamingIngest {
    * batch bootstraps. The version label is derived from the BATCH ID, not
    * wall clock, so a checkpoint-replayed batch re-merges with the SAME
    * label against rows that already carry its values — a no-op — giving
-   * at-least-once replay convergence just like [[mergeSink]] (scd2Merge's
-   * batch dedup is deterministic, so the replayed batch picks the same row).
+   * at-least-once replay convergence just like [[mergeSink]]. That rests on
+   * the batch dedup being deterministic: the merge and the bootstrap both
+   * go through `StageTransform.dedupLatest`, whose order is total up to
+   * identical rows (recency, then every other column), so the replayed
+   * batch picks the same row even when its recency ties.
    *
    * The table is partitioned on `scd_part = coalesce(valid_to,
    * '__current__')` and each micro-batch goes through the PRUNED merge:
@@ -739,8 +735,8 @@ object StreamingIngest {
           // _SUCCESS with zero parquet files, tableExists would then route
           // every later batch into a schema-less read of the empty table
           val boot = graft.write.MergeWriter
-            .scd2Bootstrap(graft.write.MergeWriter
-                .dedupDeterministic(batch, ids, recency), versionOf(batchId))
+            .scd2Bootstrap(graft.pipeline.StageTransform
+                .dedupLatest(batch, ids, recency), versionOf(batchId))
             .withColumn("scd_part", part)
           graft.write.MergeWriter.writeSwap(boot, path, Seq("scd_part"))
         }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, Spar
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import graft.meta.LoadMode
+import graft.pipeline.StageTransform
 
 /**
  * Native merge writer over Parquet — re-expresses the reference's Delta Lake
@@ -87,21 +88,24 @@ object MergeWriter {
   }
 
   /** The merge prelude shared by [[upsert]] and [[upsertPartial]]: the
-    * batch deterministically key-deduplicated ([[dedupDeterministic]]) and
-    * the target, both aligned to their union schema. */
+    * batch key-deduplicated by [[StageTransform.dedupLatest]] and the
+    * target, both aligned to their union schema. */
   private def aligned(target: DataFrame, batch: DataFrame, ids: Seq[String],
       recency: Seq[String]): (Seq[(String, String)], DataFrame, DataFrame) = {
     require(ids.nonEmpty, "merge requires at least one id column")
-    val cleanBatch = dedupDeterministic(batch, ids, recency)
+    val cleanBatch = StageTransform.dedupLatest(batch, ids, recency)
     val schema = unionSchemaOf(target, cleanBatch)
     (schema, alignTo(target, schema), alignTo(cleanBatch, schema))
   }
 
   /** K4 — upsert: batch rows replace key-matched target rows, new keys
     * append. Batch is key-deduplicated first to satisfy the single-match rule
-    * (aje-stage-dms-load.py:483-485), deterministically: the latest row by
-    * `recency` when given, else the max over the data columns (the
-    * reference's bare dropDuplicates keeps an arbitrary one). */
+    * (aje-stage-dms-load.py:483-485) by [[StageTransform.dedupLatest]]: the
+    * latest row by `recency`, ties and a missing recency settled by the max
+    * over the other columns (the reference's bare dropDuplicates keeps an
+    * arbitrary one). Passing the `recency` a batch was already deduplicated
+    * by (as [[write]] does for a stage-transform batch) makes that dedup
+    * free of any extra sort or shuffle. */
   def upsert(target: DataFrame, batch: DataFrame, ids: Seq[String],
       recency: Seq[String] = Nil): DataFrame = {
     val (schema, t, b) = aligned(target, batch, ids, recency)
@@ -110,7 +114,9 @@ object MergeWriter {
     // The using-column join moves join columns to the FRONT of its output;
     // re-select schema order or the positional union misaligns columns
     // whenever an id is not already leftmost.
-    t.join(b.select(ids.map(col): _*).dropDuplicates(ids), ids, "left_anti")
+    // The batch keys are unique after the dedup, and a left-anti join
+    // ignores duplicate keys anyway, so the key side needs no aggregate.
+    t.join(b.select(ids.map(col): _*), ids, "left_anti")
       .select(schema.map { case (n, _) => col(n) }: _*)
       .union(b)
   }
@@ -126,9 +132,10 @@ object MergeWriter {
    * Shape: ONE full-outer join on the ids (the scd2Merge discipline —
    * never an anti-join + re-join per column); per data column the output
    * is target-only → old value, batch-only → batch value, matched →
-   * coalesce(batch, old). Batch keys are deterministically deduplicated
-   * first (recency order, else max over data columns — same rule as
-   * [[upsert]]), so a replayed batch merges to the identical table:
+   * coalesce(batch, old). Batch keys are deduplicated first by
+   * [[StageTransform.dedupLatest]] (latest by `recency`, ties to the max
+   * over the other columns — same rule as [[upsert]]), so a replayed batch
+   * merges to the identical table:
    * matched coalesce is idempotent because the second pass coalesces the
    * already-patched values with an equal batch image.
    *
@@ -170,8 +177,9 @@ object MergeWriter {
     * string), not wall clock — runs replay deterministically.
     *
     * Batch key-dedup is DETERMINISTIC (unlike the reference's bare
-    * dropDuplicates): with `recency` given, the latest batch row per key
-    * wins; without it, the max over all data columns wins. Either way a
+    * dropDuplicates): [[StageTransform.dedupLatest]] keeps the latest batch
+    * row per key by `recency`, and a recency tie or a missing recency goes
+    * to the max over the other columns. Either way a
     * checkpoint-replayed batch picks the SAME row as the first run — a
     * replay merges rows the table already carries and is a no-op, which is
     * what [[graft.streaming.StreamingIngest.scd2Sink]]'s at-least-once
@@ -198,7 +206,7 @@ object MergeWriter {
     // on every key that carries it, so affected rows version as expected.
     val targetData = target.columns.filterNot(scdCols.contains).toSeq
     val bData = {
-      val d = dedupDeterministic(batch, ids, recency)
+      val d = StageTransform.dedupLatest(batch, ids, recency)
       d.drop(scdCols.filter(d.columns.contains): _*)
     }
     val dataSchema = unionSchemaOf(target.select(targetData.map(col): _*), bData)
@@ -257,36 +265,6 @@ object MergeWriter {
     hist.select(order.map(col): _*).union(merged)
   }
 
-  /** Deterministic key-dedup shared by the merges ([[upsert]],
-    * [[upsertPartial]], [[scd2Merge]]) and the scd2Sink bootstrap:
-    * latest-by-`recency` per key, falling back to the max over
-    * all non-id columns — never an arbitrary survivor, so replayed batches
-    * pick the same row. */
-  private[graft] def dedupDeterministic(batch: DataFrame, ids: Seq[String],
-      recency: Seq[String]): DataFrame = {
-    // maps are not orderable in Spark: a map-typed payload column must not
-    // break the dedup (it just can't contribute to the tie-break)
-    import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
-    def hasMap(dt: DataType): Boolean = dt match {
-      case _: MapType => true
-      case s: StructType => s.fields.exists(f => hasMap(f.dataType))
-      case a: ArrayType => hasMap(a.elementType)
-      case _ => false
-    }
-    val order =
-      if (recency.nonEmpty) recency
-      else batch.schema.fields
-        .filterNot(f => ids.contains(f.name))
-        .filterNot(f => hasMap(f.dataType))
-        .map(_.name).toSeq
-    // exactly ONE dedup shuffle either way: the window already leaves one
-    // row per key when there is an ordering; only a pure-key batch (where
-    // duplicates are identical rows) falls back to dropDuplicates
-    if (order.nonEmpty)
-      graft.pipeline.StageTransform.dedupLatest(batch, ids, order, ids)
-    else batch.dropDuplicates(ids)
-  }
-
   /** Bootstrap an SCD-2 table from a plain batch: every row current as of
     * `versionTs`. */
   def scd2Bootstrap(batch: DataFrame, versionTs: String): DataFrame =
@@ -297,13 +275,15 @@ object MergeWriter {
   /** K5 — transactional window: delete `processperiod >= cutoff` from the
     * target, then merge (aje-stage-dms-load.py:488-495). `cutoffPeriod` is
     * yyyyMM as Int. Delete keeps null periods, matching Delta's
-    * `delete(col >= x)` null semantics. */
+    * `delete(col >= x)` null semantics. The batch is deduplicated as in
+    * [[upsert]]. */
   def transactionalWindowMerge(target: DataFrame, batch: DataFrame,
       ids: Seq[String], cutoffPeriod: Int,
-      periodCol: String = "processperiod"): DataFrame = {
+      periodCol: String = "processperiod",
+      recency: Seq[String] = Nil): DataFrame = {
     val kept = target.filter(
       col(periodCol).cast("int") < cutoffPeriod || col(periodCol).isNull)
-    upsert(kept, batch, ids)
+    upsert(kept, batch, ids, recency)
   }
 
   /** Whole-table write: `df` goes to `<path>.__tmp` (never read and
@@ -516,11 +496,17 @@ object MergeWriter {
     * reference's contract: the period is derived from the row's own immutable
     * transaction date, aje-stage-dms-load.py:488-495). Any other layout needs
     * the caller to assert the stability contract via `partitionStable = true`;
-    * without it the merge falls back to the full `writeSwap`. */
+    * without it the merge falls back to the full `writeSwap`.
+    *
+    * `recency` is what the merges deduplicate the batch by (see [[upsert]]);
+    * for a stage-transform batch pass the columns it was deduplicated by
+    * ([[StageTransform.Result.recency]]), so the merge-side dedup reuses
+    * the transform's partitioning and order. */
   def write(spark: SparkSession, batch: DataFrame, path: String, mode: LoadMode,
       ids: Seq[String] = Nil, partitionCols: Seq[String] = Nil,
       cutoffPeriod: Int = 0, retrySleepMs: Int => Long = _ * 60000L,
-      partitionStable: Boolean = false): MergeStats = {
+      partitionStable: Boolean = false,
+      recency: Seq[String] = Nil): MergeStats = {
     // K6 — empty bootstrap signals OUTSIDE the retry loop (the reference
     // raises from the non-retried branch, aje-stage-dms-load.py:512-518;
     // inside a retry it would "succeed" second time around against the
@@ -536,10 +522,11 @@ object MergeWriter {
     val (name, merge, window) = mode match {
       case LoadMode.FullOverwrite => ("overwrite", None, None)
       case LoadMode.IncrementalMerge =>
-        ("merge", Some[Merge](upsert(_, _, ids)), None)
+        ("merge", Some[Merge](upsert(_, _, ids, recency)), None)
       case LoadMode.TransactionalWindowMerge(_) =>
         ("window-merge",
-          Some[Merge](transactionalWindowMerge(_, _, ids, cutoffPeriod)),
+          Some[Merge](transactionalWindowMerge(_, _, ids, cutoffPeriod,
+            recency = recency)),
           Some(col("processperiod").cast("int") >= cutoffPeriod))
     }
     val stable = partitionStable || partitionCols.forall(ids.contains) ||

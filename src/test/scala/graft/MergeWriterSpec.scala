@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.meta.LoadMode
+import graft.meta.{ColumnSpec, LoadMode}
+import graft.pipeline.StageTransform
 import graft.write.MergeWriter
 
 class MergeWriterSpec extends SparkSpec {
@@ -56,6 +57,46 @@ class MergeWriterSpec extends SparkSpec {
           "upsertPartial" -> MergeWriter.upsertPartial(target, b, Seq("id"))))
         assert(merged.as[(Int, String, Int)].collect().toSet == want,
           s"$name, $parts shuffle partitions")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+  }
+
+  test("a recency tie keeps the max over the other columns in every " +
+      "merge and in the stage transform, under any shuffle partition count") {
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val t1 = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
+    // key 1: two images with equal recency (v decides); key 3: equal
+    // recency and v (n decides); key 4: recency decides against the max
+    val rows = Seq((1, t0, "a", 1), (1, t0, "b", 0), (3, t1, "c", 9),
+      (3, t1, "c", 1), (4, t1, "a", 0), (4, t0, "z", 9))
+    val target = Seq((1, t0, "old", 7), (2, t0, "keep", 2))
+      .toDF("id", "ts", "v", "n")
+    val want = Set((1, t0, "b", 0), (2, t0, "keep", 2), (3, t1, "c", 9),
+      (4, t1, "a", 0))
+    val specs = Seq(
+      ColumnSpec("T", "id", 1, "int", "c_id", isId = true),
+      ColumnSpec("T", "ts", 2, "timestamp", "c_ts", isFilterDate = true),
+      ColumnSpec("T", "v", 3, "string", "c_v"),
+      ColumnSpec("T", "n", 4, "int", "c_n"))
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (parts <- Seq(1, 8); reversed <- Seq(false, true)) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val b = (if (reversed) rows.reverse else rows).toDF("id", "ts", "v", "n")
+      val ids = Seq("id")
+      val recency = Seq("ts")
+      val scd2 = MergeWriter.scd2Merge(MergeWriter.scd2Bootstrap(target, "t0"),
+        b, ids, "t1", recency).filter($"is_current").drop(
+        "valid_from", "valid_to", "is_current")
+      val staged = StageTransform.run(b.toDF("c_id", "c_ts", "c_v", "c_n"),
+        specs)
+      assert(staged.recency == recency)
+      for ((name, got, expected) <- Seq(
+          ("upsert", MergeWriter.upsert(target, b, ids, recency), want),
+          ("upsertPartial", MergeWriter.upsertPartial(target, b, ids, recency),
+            want),
+          ("scd2Merge", scd2, want),
+          ("StageTransform.run", staged.df, want.filter(_._1 != 2))))
+        assert(got.as[(Int, java.sql.Timestamp, String, Int)].collect().toSet ==
+          expected, s"$name, $parts shuffle partitions, reversed = $reversed")
     } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
   }
 

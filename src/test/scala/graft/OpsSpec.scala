@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Multimodal, Sampling, Similarity, Stats, TextOps}
 import graft.pipeline.StageTransform
+import graft.sources.RawZone
 import graft.meta.ColumnSpec
 
 class OpsSpec extends SparkSpec {
@@ -1380,7 +1381,7 @@ class OpsSpec extends SparkSpec {
   test("timestamp shift: -5h applied to every timestamp column (S5)") {
     val df = Seq(java.sql.Timestamp.valueOf("2024-01-01 12:00:00"))
       .toDF("ts")
-    val got = StageTransform.shiftTimestamps(df).as[java.sql.Timestamp]
+    val got = RawZone.shiftTimestamps(df).as[java.sql.Timestamp]
       .collect().head
     assert(got == java.sql.Timestamp.valueOf("2024-01-01 07:00:00"))
   }

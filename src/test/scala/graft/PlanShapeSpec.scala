@@ -164,6 +164,70 @@ class PlanShapeSpec extends SparkSpec {
     assert(windows <= 1, s"expected <= 1 dedup window, got $windows:\n$p")
   }
 
+  test("an orchestrated merge deduplicates the batch once, " +
+      "with no key aggregate") {
+    // IngestOrchestrator hands MergeWriter.write the recency the transform
+    // deduplicated by, so the merge's dedup window has the transform's
+    // partitioning and order: every Sort and Exchange on the batch side
+    // belongs to the transform's own window, once per batch scan (the
+    // anti-join key side and the union side). Spark 4.1 plans that window
+    // with two Sorts: the map-side group limit's below the exchange and the
+    // window's above it. A merge window with another order shows as extra
+    // Sorts; a key-side dropDuplicates as HashAggregates.
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.meta.{ColumnSpec, TableConfig}
+    val dir = java.nio.file.Files.createTempDirectory("graft_orch").toString
+    val (d1, d2) = ("2024-01-01 00:00:00", "2024-01-02 00:00:00")
+    Seq(("1", d1, "a", "x"), ("1", d1, "b", "y"), ("2", d2, "c", "z"))
+      .toDF("c_id", "c_ts", "c_v", "c_w")
+      .write.option("header", "true").csv(s"$dir/raw")
+    val specs = Seq(
+      ColumnSpec("T", "id", 1, "bigint", "c_id", isId = true),
+      ColumnSpec("T", "v", 2, "string", "c_v"),
+      ColumnSpec("T", "ts", 3, "timestamp", "c_ts", isFilterDate = true),
+      ColumnSpec("T", "w", 4, "string", "upper(c_w)"))
+    def raw() = graft.sources.RawZone.readRawCsv(spark, s"$dir/raw")
+    val orch = new graft.pipeline.IngestOrchestrator(spark, s"$dir/stage",
+      readRaw = _ => raw(), specsFor = _ => specs, retrySleepMs = _ => 0L)
+    val table = TableConfig("T", "ep", "src", "raw", "stg_t",
+      loadType = "incremental")
+    assert(orch.runTable(table).status == "SUCCEEDED") // bootstrap
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        val plan = qe.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.initialPlan
+          case p => p
+        }
+        if (qe.logical.getClass.getSimpleName ==
+            "InsertIntoHadoopFsRelationCommand") writes.add(plan.toString)
+      }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.SpecBus.drain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try {
+      assert(orch.runTable(table).status == "SUCCEEDED") // the merge
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    assert(writes.size == 1, writes)
+    val p = writes.asScala.head
+    def count(pattern: String, in: String): Int = pattern.r.findAllIn(in).size
+    val scans = count("FileScan csv", p)
+    val transformSorts = count("""\bSort \[""",
+      graft.pipeline.StageTransform.run(raw(), specs).df
+        .queryExecution.executedPlan.toString)
+    assert(p.contains("LeftAnti") && scans == 2, p)
+    assert(count("""\bSort \[""", p) == scans * transformSorts,
+      s"$transformSorts Sorts per transform window:\n$p")
+    assert(count("Exchange hashpartitioning", p) == scans, p)
+    assert(!p.contains("HashAggregate"), p)
+  }
+
   test("grouped top-k rank-limits BEFORE the shuffle (WindowGroupLimit)") {
     // Spark's rank-limit pushdown keeps only <= k rows per group per
     // partition map-side, so the exchange carries k x groups x partitions

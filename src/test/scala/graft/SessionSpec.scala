@@ -58,8 +58,7 @@ class SessionSpec extends SparkSpec {
   test("renames publish only in the write layer; one recursive delete") {
     val files = mainSources
     val movers = files.filter(_._2.contains("Files.move(")).map(_._1).toSet
-    assert(movers.subsetOf(
-      Set("MergeWriter.scala", "SnapshotStore.scala", "ResultCache.scala")),
+    assert(movers.subsetOf(Set("MergeWriter.scala", "SnapshotStore.scala")),
       movers)
     // a helper named for recursive deletion, or the walk-then-delete-
     // deepest-first idiom: commons-io FileUtils is the one implementation
