@@ -45,12 +45,21 @@ final class IngestOrchestrator(
       val result = StageTransform.run(raw, specs)
       val partitions = specs.filter(_.isPartition).map(_.columnName)
       val ids = specs.filter(_.isId).map(_.columnName)
+      val mode = LoadMode.of(t)
+      // a merge cannot match on a key column the transform quarantined, nor
+      // any write lay out by a missing partition column: fail the table
+      // now, naming the column, instead of in every retry of the write
+      val keys = partitions ++ (if (mode == LoadMode.FullOverwrite) Nil else ids)
+      val broken = result.quarantined.filter { case (c, _) => keys.contains(c) }
+      if (broken.nonEmpty)
+        throw new IllegalArgumentException("can not create the key columns: " +
+          broken.map { case (c, e) => s"$c ($e)" }.mkString(", "))
       val cutoff = currentCutoff(t)
       // the merge deduplicates the batch by the recency the transform used
       // (live columns only: a quarantined one would fail the write), which
       // reuses the transform's window instead of sorting again
       val stats = MergeWriter.write(spark, result.df,
-        s"$stageRoot/${t.stageTableName}", LoadMode.of(t), ids, partitions,
+        s"$stageRoot/${t.stageTableName}", mode, ids, partitions,
         cutoff, retrySleepMs = retrySleepMs,
         partitionStable = t.partitionStable, recency = result.recency)
       // the reference re-runs its catalog crawler after stage loads

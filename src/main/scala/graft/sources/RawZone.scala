@@ -1,8 +1,18 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
+import scala.util.Try
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
 /**
  * Raw-zone CSV source/sink — S4/S5/S6 scans and K1/K2 sinks.
@@ -41,9 +51,59 @@ object RawZone {
   }
 
   /** S4 — CSV scan with header, schema-less (all strings), codec
-    * auto-detected from the extension. */
-  def readRawCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").csv(path)
+    * auto-detected from the extension.
+    *
+    * The frame is the one `spark.read.option("header", "true").csv(path)`
+    * returns, but the header is read on the driver instead of by Spark's
+    * schema inference, which runs two SQL executions per read: the first
+    * non-blank line of the first file in Spark's scan order (largest split
+    * first, then listing order), parsed by Spark's own CSV parser settings
+    * and `makeSafeHeader` (an empty name becomes `_c<i>`; duplicates, case
+    * folded unless the session is case sensitive, get their index
+    * appended). The scan then gets that all-string schema, so building the
+    * frame launches no Spark job. With no file or no such line it is the
+    * inferring call itself, errors included. */
+  def readRawCsv(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read.option("header", "true")
+    headerSchema(spark, path).fold(reader.csv(path))(reader.schema(_).csv(path))
+  }
+
+  /** The all-string schema [[readRawCsv]]'s header gives, if a first file
+    * has a non-blank line. */
+  private def headerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val sql = spark.sessionState.conf
+    val options = new CSVOptions(Map("header" -> "true"), sql.csvColumnPruning,
+      sql.sessionLocalTimeZone)
+    val codecs = new CompressionCodecFactory(conf)
+    Try {
+      val fs = new Path(path).getFileSystem(conf)
+      val roots = Option(fs.globStatus(fs.makeQualified(new Path(path))))
+        .fold(Seq.empty[Path])(_.toSeq.map(_.getPath))
+      // the files the scan reads, in listing order, and the split size it
+      // packs them by
+      val files = new InMemoryFileIndex(spark, roots, Map.empty, None)
+        .allFiles().filter(_.getLen > 0)
+      val maxSplit = FilePartition.maxSplitBytes(spark,
+        Seq(PartitionDirectory(InternalRow.empty, files.toArray)))
+      def firstSplit(f: FileStatus): Long = codecs.getCodec(f.getPath) match {
+        case null | _: SplittableCompressionCodec => math.min(f.getLen, maxSplit)
+        case _ => f.getLen
+      }
+      files.sortBy(-firstSplit(_)).headOption.flatMap { f =>
+        val raw = fs.open(f.getPath)
+        val lines = new BufferedReader(new InputStreamReader(
+          Option(codecs.getCodec(f.getPath)).fold[InputStream](raw)(_.createInputStream(raw)),
+          StandardCharsets.UTF_8))
+        // blank as in Spark's `length(trim(value)) > 0` filter: spaces only
+        try Iterator.continually(lines.readLine()).takeWhile(_ != null)
+          .find(_.exists(_ != ' '))
+        finally lines.close()
+      }.flatMap(line => Option(new CsvParser(options.asParserSettings).parseLine(line)))
+        .map(row => StructType(CSVUtils.makeSafeHeader(row, sql.caseSensitiveAnalysis,
+          options).toSeq.map(StructField(_, StringType, nullable = true))))
+    }.toOption.flatten
+  }
 
   /** S6 — read with empty-relation fallback: a missing/corrupt prefix yields
     * an empty frame instead of failing the run. */

@@ -6,6 +6,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.meta.LoadMode
 import graft.pipeline.StageTransform
 
@@ -312,7 +313,7 @@ object MergeWriter {
     val obs = Observation()
     val rsd = df.sparkSession.conf.get("spark.sql.statistics.ndv.maxError").toDouble
     val ndv = cols.map(c => approx_count_distinct(col(c), rsd).as(c))
-    val observed = if (cols.isEmpty) df else df.observe(obs, ndv.head, ndv.tail: _*)
+    val observed = if (cols.nonEmpty) df.observe(obs, ndv.head, ndv.tail: _*) else df
     val tmp = path + ".__tmp"
     val writer = observed.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
@@ -320,9 +321,9 @@ object MergeWriter {
     publish(tmp, path)
     val rows = ParquetFooters.of(path).values.map(_.rows).sum
     val counts =
-      if (cols.isEmpty) None
-      else scala.util.Try(scala.concurrent.Await.result(obs.future,
+      if (cols.nonEmpty) scala.util.Try(scala.concurrent.Await.result(obs.future,
         scala.concurrent.duration.Duration(1, "minute"))).toOption
+      else None
     (rows, counts.fold(Map.empty[String, Long])(_.getValuesMap[Long](cols)))
   }
 
@@ -345,6 +346,18 @@ object MergeWriter {
     publishHook(path, 3)
   }
 
+  /** The stage table at `path`. Its data schema is the union of the live
+    * files' footer schemas ([[ParquetFooters]], cached, as
+    * [[CatalogRegistry.registerStage]] reads it), so the read launches no
+    * schema job and keeps a column only some files carry, where Spark's
+    * inference samples one file; partition columns come from the directory
+    * names. */
+  private def readTable(spark: SparkSession, path: String): DataFrame = {
+    val schema = ParquetFooters.unionSchema(ParquetFooters.of(path))
+    require(schema.nonEmpty, s"no parquet data files under $path to read")
+    spark.read.schema(schema).parquet(path)
+  }
+
   /** Partition-pruned merge-and-swap (Delta file-pruning analog,
     * aje-stage-dms-load.py:482-495). Touched set = the batch's distinct
     * partition values plus any partitions matching `alsoTouched` (the
@@ -358,6 +371,14 @@ object MergeWriter {
     * the driver adds one link per carried-over file and one unlink per
     * file of the old version.
     *
+    * The batch is evaluated once: it is held `MEMORY_AND_DISK` for the
+    * write (unless the caller already cached it), so the touched-partition
+    * probe and the merge both read that copy instead of re-running the
+    * batch's plan (for a stage batch: CSV parse, DSL, dedup shuffle), and
+    * it is released when the write ends, failed or not. The target's
+    * schema comes from the footers (see [[readTable]]), so no other job
+    * runs.
+    *
     * Contract (the standard pruned-merge one): a row's partition values must
     * be stable under update — a key may not move between partitions, or its
     * stale copy in the old partition would survive unpruned. The reference's
@@ -368,74 +389,78 @@ object MergeWriter {
   def prunedMergeWrite(spark: SparkSession, batch: DataFrame, path: String,
       partitionCols: Seq[String], alsoTouched: Option[Column],
       merge: (DataFrame, DataFrame) => DataFrame): Long = {
-    val pc = partitionCols.map(col)
-    val target = spark.read.parquet(path)
-    val batchVals = batch.select(pc: _*).distinct().collect()
-    // Existing partition VALUES come from the DIRECTORY STRUCTURE (one
-    // listing, O(partitions)), not from a `select(partCols).distinct()`
-    // data scan — that enumerates one row per TABLE row, which at 100 TB
-    // is a full-table pass just to learn ~10^3 partition values. The
-    // parsed strings are cast to the target's partition types and every
-    // predicate below evaluates over that tiny local frame; keeping the
-    // on-disk relative path alongside the typed values is also how touched
-    // directories are located — matching parsed leaf dirs, never
-    // re-rendering values (Timestamp.toString and friends do not
-    // round-trip Spark's write-side partition-path formatting).
-    val dirCol = "__graft_dir"
-    val diskDirs = leafPartitionDirs(Paths.get(path), partitionCols.length)
-    val parsed = diskDirs.map { rel =>
-      rel.toString +: rel.toString.split("/").map { seg =>
-        val raw = ExternalCatalogUtils
-          .unescapePathName(seg.substring(seg.indexOf('=') + 1))
-        if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-        else raw
-      }.toSeq
-    }
-    val strSchema = org.apache.spark.sql.types.StructType(
-      (dirCol +: partitionCols).map(c => org.apache.spark.sql.types
-        .StructField(c, org.apache.spark.sql.types.StringType, true)))
-    val typeOf = target.schema.fields.map(f => f.name -> f.dataType).toMap
-    val diskDf = spark.createDataFrame(
-        java.util.Arrays.asList(parsed.map(Row(_: _*)): _*), strSchema)
-      .select(col(dirCol) +:
-        partitionCols.map(c => col(c).cast(typeOf(c)).as(c)): _*)
-    val extraVals =
-      alsoTouched.toSeq.flatMap(p => diskDf.filter(p).select(pc: _*).collect())
-    val touched = (batchVals ++ extraVals).map(_.toSeq).distinct.toSeq
-    if (touched.isEmpty) return 0L
+    val own = batch.storageLevel == StorageLevel.NONE
+    if (own) batch.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val pc = partitionCols.map(col)
+      val target = readTable(spark, path)
+      val batchVals = batch.select(pc: _*).distinct().collect()
+      // Existing partition VALUES come from the DIRECTORY STRUCTURE (one
+      // listing, O(partitions)), not from a `select(partCols).distinct()`
+      // data scan — that enumerates one row per TABLE row, which at 100 TB
+      // is a full-table pass just to learn ~10^3 partition values. The
+      // parsed strings are cast to the target's partition types and every
+      // predicate below evaluates over that tiny local frame; keeping the
+      // on-disk relative path alongside the typed values is also how touched
+      // directories are located — matching parsed leaf dirs, never
+      // re-rendering values (Timestamp.toString and friends do not
+      // round-trip Spark's write-side partition-path formatting).
+      val dirCol = "__graft_dir"
+      val diskDirs = leafPartitionDirs(Paths.get(path), partitionCols.length)
+      val parsed = diskDirs.map { rel =>
+        rel.toString +: rel.toString.split("/").map { seg =>
+          val raw = ExternalCatalogUtils
+            .unescapePathName(seg.substring(seg.indexOf('=') + 1))
+          if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+          else raw
+        }.toSeq
+      }
+      val strSchema = org.apache.spark.sql.types.StructType(
+        (dirCol +: partitionCols).map(c => org.apache.spark.sql.types
+          .StructField(c, org.apache.spark.sql.types.StringType, true)))
+      val typeOf = target.schema.fields.map(f => f.name -> f.dataType).toMap
+      val diskDf = spark.createDataFrame(
+          java.util.Arrays.asList(parsed.map(Row(_: _*)): _*), strSchema)
+        .select(col(dirCol) +:
+          partitionCols.map(c => col(c).cast(typeOf(c)).as(c)): _*)
+      val extraVals =
+        alsoTouched.toSeq.flatMap(p => diskDf.filter(p).select(pc: _*).collect())
+      val touched = (batchVals ++ extraVals).map(_.toSeq).distinct.toSeq
+      if (touched == Nil) return 0L
 
-    // OR of per-partition equality conjunctions — the shape Spark's
-    // partition pruning folds into PartitionFilters (directory-level skip)
-    val pred = touched.map(vals =>
-      partitionCols.zip(vals).map { case (c, v) =>
-        if (v == null) col(c).isNull else col(c) === lit(v)
-      }.reduce(_ && _)).reduce(_ || _)
+      // OR of per-partition equality conjunctions — the shape Spark's
+      // partition pruning folds into PartitionFilters (directory-level skip)
+      val pred = touched.map(vals =>
+        partitionCols.zip(vals).map { case (c, v) =>
+          if (v == null) col(c).isNull else col(c) === lit(v)
+        }.reduce(_ && _)).reduce(_ || _)
 
-    val merged = merge(target.filter(pred), batch)
-    val tmp = path + ".__tmp"
-    merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-      .parquet(tmp)
+      val merged = merge(target.filter(pred), batch)
+      val tmp = path + ".__tmp"
+      merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
+        .parquet(tmp)
 
-    // Carried over = every on-disk leaf dir minus those the touched
-    // predicate selects (a set difference: a NULL-valued predicate keeps a
-    // directory rather than dropping it) and those the merge wrote anew.
-    val tmpRoot = Paths.get(tmp)
-    val touchedDirs = diskDf.filter(pred).select(dirCol).collect().map(_.getString(0))
-    val written = leafPartitionDirs(tmpRoot, partitionCols.length).map(_.toString)
-    val keep = diskDirs.map(_.toString).filterNot((touchedDirs ++ written).toSet)
-    for (rel <- keep) {
-      val dest = Files.createDirectories(tmpRoot.resolve(rel))
-      val s = Files.list(Paths.get(path).resolve(rel))
-      try s.iterator().asScala.filter(Files.isRegularFile(_))
-        .foreach(f => Files.createLink(dest.resolve(f.getFileName), f))
-      finally s.close()
-    }
-    publish(tmp, path)
-    // rows written = the files of the partitions the merge wrote
-    ParquetFooters.of(path).collect { case (rel, f)
-      if Option(Paths.get(rel).getParent).exists(d => written.contains(d.toString)) =>
-        f.rows
-    }.sum
+      // Carried over = every on-disk leaf dir minus those the touched
+      // predicate selects (a set difference: a NULL-valued predicate keeps a
+      // directory rather than dropping it) and those the merge wrote anew.
+      val tmpRoot = Paths.get(tmp)
+      val touchedDirs = diskDf.filter(pred).select(dirCol).collect().map(_.getString(0))
+      val written = leafPartitionDirs(tmpRoot, partitionCols.length).map(_.toString)
+      val keep = diskDirs.map(_.toString).filterNot((touchedDirs ++ written).toSet)
+      for (rel <- keep) {
+        val dest = Files.createDirectories(tmpRoot.resolve(rel))
+        val s = Files.list(Paths.get(path).resolve(rel))
+        try s.iterator().asScala.filter(Files.isRegularFile(_))
+          .foreach(f => Files.createLink(dest.resolve(f.getFileName), f))
+        finally s.close()
+      }
+      publish(tmp, path)
+      // rows written = the files of the partitions the merge wrote
+      ParquetFooters.of(path).collect { case (rel, f)
+        if Option(Paths.get(rel).getParent).exists(d => written.contains(d.toString)) =>
+          f.rows
+      }.sum
+    } finally if (own) batch.unpersist()
   }
 
   /** Relative paths of the depth-`n` partition directories under `root`. */
@@ -460,7 +485,7 @@ object MergeWriter {
   def compact(spark: SparkSession, path: String, target: Int = 1,
       partitionCols: Seq[String] = Nil): Long = {
     // no partition columns: a round-robin repartition into `target` files
-    writeSwap(spark.read.parquet(path)
+    writeSwap(readTable(spark, path)
       .repartition(target, partitionCols.map(col): _*), path, partitionCols)
   }
 
@@ -470,7 +495,7 @@ object MergeWriter {
       body: => T): T = {
     var attempt = 0
     var out: Option[T] = None
-    while (out.isEmpty) {
+    while (out == None) {
       try out = Some(body)
       catch {
         case e: Exception =>
@@ -485,6 +510,12 @@ object MergeWriter {
   /** Full load-mode-routed write (reference flow aje-stage-dms-load.py:470-518
     * + transform_light.py:388-417). Throws NoDataToMigrateException after
     * bootstrapping an empty table, as the reference does (K6).
+    *
+    * Each route evaluates the batch in only the executions it needs: the
+    * whole-table routes in their one write, the pruned routes once into the
+    * copy [[prunedMergeWrite]] holds for its probe and merge. The target's
+    * schema, the row count and the emptiness check come from metadata
+    * (footers and the write's own count), not from Spark jobs.
     *
     * Pruned-route gating: the pruned merge is only taken when a key provably
     * cannot move between partitions — otherwise a moved key's stale copy in
@@ -507,14 +538,13 @@ object MergeWriter {
       cutoffPeriod: Int = 0, retrySleepMs: Int => Long = _ * 60000L,
       partitionStable: Boolean = false,
       recency: Seq[String] = Nil): MergeStats = {
-    // K6 — empty bootstrap signals OUTSIDE the retry loop (the reference
-    // raises from the non-retried branch, aje-stage-dms-load.py:512-518;
-    // inside a retry it would "succeed" second time around against the
-    // just-bootstrapped empty table).
-    if (!tableExists(path) && batch.isEmpty) {
-      writeSwap(batch, path, partitionCols)
-      throw new NoDataToMigrateException
-    }
+    // K6 — a bootstrap writes through the overwrite route like any other
+    // batch, and one that wrote no rows signals AFTER the retry loop (the
+    // reference raises from the non-retried branch,
+    // aje-stage-dms-load.py:512-518; inside a retry it would "succeed"
+    // second time around against the just-bootstrapped empty table). The
+    // write's own row count decides, so no job probes the batch first.
+    val bootstrap = !tableExists(path)
     // One route per load mode: its name, merge function and the deleted
     // window (extra touched partitions: periods the batch has no
     // replacement rows for must still be emptied).
@@ -532,18 +562,20 @@ object MergeWriter {
     val stable = partitionStable || partitionCols.forall(ids.contains) ||
       (window.isDefined && partitionCols == Seq("processperiod"))
     val pruned = partitionCols.nonEmpty && stable &&
-      (window.isEmpty || partitionCols.contains("processperiod"))
+      (!window.isDefined || partitionCols.contains("processperiod"))
     def swapStats(route: String, table: DataFrame): MergeStats = {
       val (rows, ndv) = observedSwap(table, path, partitionCols, ids)
       MergeStats(route, rows, ndv)
     }
-    withRetry(3, retrySleepMs) {
+    val stats = withRetry(3, retrySleepMs) {
       (merge, tableExists(path)) match {
         case (Some(m), true) if pruned => MergeStats(s"$name-pruned",
           prunedMergeWrite(spark, batch, path, partitionCols, window, m))
-        case (Some(m), true) => swapStats(name, m(spark.read.parquet(path), batch))
+        case (Some(m), true) => swapStats(name, m(readTable(spark, path), batch))
         case _ => swapStats("overwrite", batch)
       }
     }
+    if (bootstrap && stats.rowsWritten == 0) throw new NoDataToMigrateException
+    stats
   }
 }

@@ -13,8 +13,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /**
  * The parquet footers of a stage table's live data files — the one place
- * the library opens a footer. The writer sums their record counts and the
- * catalog derives its statistics from them (Delta's per-file `stats` in
+ * the library opens a footer. The writer sums their record counts and
+ * reads its targets by their union schema, and the catalog derives its
+ * statistics from them (Delta's per-file `stats` in
  * each add action, aje-stage-dms-load.py:470-518, read back from the
  * footers parquet already writes).
  *

@@ -141,6 +141,39 @@ class EntrySpec extends SparkSpec {
     assert(got == Set((1L, "a"), (2L, "b"), (3L, "C"), (4L, "d"), (5L, "e")))
   }
 
+  test("orchestrator: a quarantined merge key fails the table before the write") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_orch_badkey").toString
+    val cfg = TableConfig("T_BK", "EP", "s", "bk", "bk_stage",
+      loadType = "incremental")
+    val specs = Seq(
+      ColumnSpec("T_BK", "id", 1, "bigint", "no_such_col", isId = true),
+      ColumnSpec("T_BK", "v", 2, "string", "v"))
+    val sleeps = new java.util.concurrent.atomic.AtomicInteger
+    val orch = new IngestOrchestrator(spark, root,
+      readRaw = _ => Seq((1L, "a"), (2L, "b")).toDF("c_id", "v"),
+      specsFor = _ => specs, retrySleepMs = _ => { sleeps.incrementAndGet(); 0L })
+    for (day <- 0 to 1) {
+      val st = orch.runTable(cfg)
+      assert(st.status == "FAILED", s"day $day: $st")
+      assert(st.failReason.contains("key columns: id (") &&
+        st.failReason.contains("no_such_col"), s"day $day: ${st.failReason}")
+    }
+    assert(sleeps.get == 0)
+    assert(!Files.exists(java.nio.file.Paths.get(root, "bk_stage")))
+    // a full load needs no key to merge on, but every load lays its files
+    // out by the partition columns
+    def full(specs: Seq[ColumnSpec]) = new IngestOrchestrator(spark, root,
+      readRaw = _ => Seq((1L, "a"), (2L, "b")).toDF("c_id", "v"),
+      specsFor = _ => specs, retrySleepMs = _ => { sleeps.incrementAndGet(); 0L })
+      .runTable(cfg.copy(loadType = "full", stageTableName = "full_stage"))
+    assert(full(specs).status == "WARNING")
+    val badPart = full(Seq(ColumnSpec("T_BK", "id", 1, "bigint", "c_id", isId = true),
+      ColumnSpec("T_BK", "p", 2, "int", "no_such_col", isPartition = true)))
+    assert(badPart.status == "FAILED" && badPart.failReason.contains("key columns: p ("),
+      badPart)
+  }
+
   test("orchestrator: end-to-end multi-table run with status recording") {
     val root = Files.createTempDirectory("graft_orch").toString
     val cfgGood = TableConfig("T_CUST", "EP_PE", "s", "customer", "cust_stage",
@@ -299,10 +332,9 @@ class EntrySpec extends SparkSpec {
       specsFor = specsFor, parallelism = 5, retrySleepMs = _ => 1L)
     assert(seed.runAll(tables).forall(_.status == "SUCCEEDED"))
     // Phase 2: upsert ids 3..6; even-numbered tables hit a transient
-    // fault the first time the batch is materialized (inside withRetry —
-    // the empty-bootstrap probe is short-circuited by the non-empty
-    // target, and its zero-column projection prunes the deterministic
-    // UDF anyway). The fault fires once per table, then heals.
+    // fault the first time the batch is materialized (inside withRetry:
+    // nothing evaluates the batch before the write). The fault fires once
+    // per table, then heals.
     EntrySpec.chaosFired.clear()
     val orch = new IngestOrchestrator(spark, root,
       readRaw = tc => mkBatch(tc, 3 to 6,

@@ -82,4 +82,13 @@ class SessionSpec extends SparkSpec {
     // what keeps a warm day's footer reads to the new files)
     assert(holders("""ParquetFileReader\s*\.\s*open""") == Set("ParquetFooters.scala"))
   }
+
+  test("the writer takes its metadata from footers and the write, not jobs") {
+    val writer = mainSources.collect { case ("MergeWriter.scala", src) => src }
+    assert(writer.size == 1, "MergeWriter.scala not found")
+    // a schema-less parquet read launches a schema job; an emptiness probe
+    // evaluates the batch once more before the write does
+    assert("""read\s*\.\s*parquet\s*\(""".r.findFirstIn(writer.head).isEmpty)
+    assert(!writer.head.contains(".isEmpty"))
+  }
 }

@@ -23,6 +23,70 @@ class SourcesSpec extends SparkSpec {
     assert(gz.nonEmpty)
   }
 
+  /** `body`'s result and the Spark jobs and SQL executions it started,
+    * counted once the listener bus has drained. */
+  private def launched[T](body: => T): (T, Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val (jobs, execs) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.SpecBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.SpecBus.drain(sc)
+      (r, jobs.get, execs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("header read on the driver: Spark's inferred schema and rows, no job") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val root = java.nio.file.Files.createTempDirectory("rawheader")
+    def put(dir: String, name: String, header: String, rows: Int): Unit = {
+      val f = root.resolve(dir).resolve(name)
+      java.nio.file.Files.createDirectories(f.getParent)
+      val text = (header +: (1 to rows).map(i =>
+        s"$i,n$i,N${i * 7},,\"q,$i\",${i % 3}")).mkString("", "\n", "\n")
+      val out = java.nio.file.Files.newOutputStream(f)
+      val sink = if (name.endsWith(".gz")) new java.util.zip.GZIPOutputStream(out) else out
+      try sink.write(text.getBytes(UTF_8)) finally sink.close()
+    }
+    // a name duplicated exactly and up to case, an empty name and a quoted
+    // name holding a comma; the other files' headers differ, so only the
+    // first file in scan order can give this schema
+    val header = "id,Name,name,,\"x,y\",id"
+    val other = "a,b,c,d,e,f"
+    // the compressed file is the largest: its header, after a blank line
+    put("gz_first", "part-0.csv.gz", "   \n" + header, 3000)
+    put("gz_first", "part-1.csv", other, 40)
+    put("gz_first", "part-2.csv", "", 0)
+    // the plain file is the largest
+    put("plain_first", "part-0.csv", header, 400)
+    put("plain_first", "part-1.csv.gz", other, 5)
+    put("plain_first", "part-2.csv.gz", other, 0)
+    java.nio.file.Files.createFile(root.resolve("plain_first/part-3.csv"))
+    for (dir <- Seq("gz_first", "plain_first")) {
+      val path = root.resolve(dir).toString
+      val (want, inferJobs, _) =
+        launched(spark.read.option("header", "true").csv(path))
+      assert(inferJobs > 0, "the inferring read launched no job to compare with")
+      val (got, jobs, executions) = launched(RawZone.readRawCsv(spark, path))
+      assert(jobs == 0 && executions == 0, s"$dir: $jobs jobs, $executions executions")
+      assert(got.schema == want.schema, dir)
+      assert(got.columns.toSeq == Seq("id0", "Name1", "name2", "_c3", "x,y", "id5"), dir)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      assert(rows(got) == rows(want), dir)
+    }
+  }
+
   test("dated raw path: padding, sqlserver rename, first table token") {
     val d = java.time.LocalDate.of(2024, 3, 7)
     assert(graft.sources.RawZone.datedPath("s3://raw", "aje", "mssql",
