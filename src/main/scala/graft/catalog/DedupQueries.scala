@@ -275,7 +275,8 @@ private[graft] object DedupQueries {
     ("q_dedup_lsh_tuning",
       (s: SparkSession, d: String) => {
         val docs = t(s, d, "documents")
-        // lazy cuts (r13): same compute-once, no upfront blocking jobs —
+        // lazy cuts (r13): same compute-once; their shuffle stages still
+        // run at the call (AQE) and only the cache fills wait —
         // truth feeds 3 band joins + the n_true anchor, sigs 3 bandings
         val truth = Dedup.ppjoinPairs(docs, "doc_id", "text", n = 5,
             threshold = 0.7)

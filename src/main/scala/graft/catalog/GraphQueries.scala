@@ -434,7 +434,8 @@ private[graft] object GraphQueries {
           .select(col("pk").as("src"), col("pk2").as("dst")).distinct()
         val capped = Graph.capDegree(e0, "src", "dst", maxDegree = 8)
           // adj, wedge, anti and degrees all rescan it — lazy cut (r13):
-          // same compute-once via the checkpoint cache, no blocking job
+          // same compute-once via the checkpoint cache; its shuffle stages
+          // still run at the call (AQE), only the cache fill waits
           .localCheckpoint(false)
         val adj = capped.select(col("src").as("n"), col("dst").as("v"))
           .union(capped.select(col("dst").as("n"), col("src").as("v")))

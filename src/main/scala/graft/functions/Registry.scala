@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
@@ -47,33 +46,24 @@ object Registry {
                else ""
       E(Transforms.column(dsl, dt))
     }),
-    // Expression-positional forms (arguments are ordinary SQL expressions).
+    // Expression-positional forms (arguments are ordinary SQL expressions),
+    // through the builders the DSL's own arms use.
     "fn_transform_concatenate" -> ((exprs: Seq[Expression]) =>
-      E(concat_ws("|", exprs.map(C): _*))),
+      E(Transforms.concatenate("|", exprs.map(C)))),
     "fn_transform_concatenate_ws" -> ((exprs: Seq[Expression]) => {
       val sep = litString(exprs.last, "fn_transform_Concatenate_ws: separator")
-      E(concat_ws(sep, exprs.dropRight(1).map(C): _*))
+      E(Transforms.concatenate(sep, exprs.dropRight(1).map(C)))
     }),
-    "fn_transform_bytemagic" -> ((exprs: Seq[Expression]) => {
-      val c = C(exprs.head)
-      E(when(c === "T", "T").when(c === "F", "F").otherwise(C(exprs(1))))
-    }),
-    "fn_transform_clearstring" -> ((exprs: Seq[Expression]) => {
-      val c = C(exprs.head)
-      E(if (exprs.length > 1)
-          when(c.isNotNull, trim(c)).otherwise(C(exprs(1)))
-        else trim(c))
-    }),
+    "fn_transform_bytemagic" -> ((exprs: Seq[Expression]) =>
+      E(Transforms.byteMagic(C(exprs.head), C(exprs(1))))),
+    "fn_transform_clearstring" -> ((exprs: Seq[Expression]) =>
+      E(Transforms.clearString(C(exprs.head), exprs.lift(1).map(C)))),
     "fn_transform_date_to_string" -> ((exprs: Seq[Expression]) =>
-      E(date_format(C(exprs.head),
+      E(Transforms.dateToString(C(exprs.head),
         litString(exprs(1), "fn_transform_Date_to_String: format")))),
     // Injectable clock (see [[Transforms.nowUtc]]): fixed via the
     // `spark.graft.now` session conf, wall-clock otherwise.
     "graft_now" -> ((_: Seq[Expression]) => E(Transforms.nowUtc())),
-    "fn_transform_periodmagic" -> ((exprs: Seq[Expression]) => {
-      val p = C(exprs.head)
-      val e = C(exprs(1))
-      E(when(p.isNull, "190001")
-        .otherwise(concat(p.cast("string"), lpad(e.cast("string"), 2, "0"))))
-    }))
+    "fn_transform_periodmagic" -> ((exprs: Seq[Expression]) =>
+      E(Transforms.periodMagic(C(exprs.head), C(exprs(1))))))
 }

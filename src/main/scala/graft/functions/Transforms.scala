@@ -100,17 +100,15 @@ object Transforms {
 
       // concat with "|" separator (aje-stage-dms-load.py:150-152)
       case "fn_transform_Concatenate" =>
-        concat_ws("|", args.map(argCol): _*)
+        concatenate("|", args.map(argCol))
 
       // concat with explicit separator, LAST param (:154-156)
       case "fn_transform_Concatenate_ws" =>
-        concat_ws(rawText(args.last), args.dropRight(1).map(argCol): _*)
+        concatenate(rawText(args.last), args.dropRight(1).map(argCol))
 
       // 'T'/'F' pass-through, else default ($lit or column) (:158-165)
       case "fn_transform_ByteMagic" =>
-        val c = argCol(args.head)
-        when(c === "T", "T").when(c === "F", "F")
-          .otherwise(litOrCol(rawText(args(1))))
+        byteMagic(argCol(args.head), litOrCol(rawText(args(1))))
 
       // QUIRK: last rule wins, unmatched -> null (:167-175)
       case "fn_transform_Case" =>
@@ -133,17 +131,13 @@ object Transforms {
 
       // "pending review" in the reference — aliased to Concatenate_ws (:237-239)
       case "fn_transform_ClearDouble" =>
-        concat_ws(rawText(args.last), args.dropRight(1).map(argCol): _*)
+        concatenate(rawText(args.last), args.dropRight(1).map(argCol))
 
-      // trim; 2-arg form defaults nulls (:241-258)
       case "fn_transform_ClearString" =>
-        val c = argCol(args.head)
-        if (args.length > 1)
-          when(c.isNotNull, trim(c)).otherwise(litOrCol(rawText(args(1))))
-        else trim(c)
+        clearString(argCol(args.head), args.lift(1).map(a => litOrCol(rawText(a))))
 
       case "fn_transform_Date_to_String" =>
-        date_format(argCol(args.head), rawText(args(1)))
+        dateToString(argCol(args.head), rawText(args(1)))
 
       // proleptic-ordinal decode, regex-gated (:263-277); 693596 == ordinal of
       // 1900-01-01 (python date.toordinal convention)
@@ -174,12 +168,8 @@ object Transforms {
             .otherwise(to_timestamp(decodeOrdinal(cd).cast("string"), dateFmt)))
           .otherwise(to_timestamp(lit(dflt), dateFmt))
 
-      // null period -> '190001'; else period || lpad(exercise,2,'0') (:311-322)
       case "fn_transform_PeriodMagic" =>
-        val p = argCol(args.head)
-        val e = argCol(args(1))
-        when(p.isNull, "190001")
-          .otherwise(concat(p.cast("string"), lpad(e.cast("string"), 2, "0")))
+        periodMagic(argCol(args.head), argCol(args(1)))
 
       case other =>
         // Reference returns the frame unchanged for unknown functions (:324-325)
@@ -190,6 +180,32 @@ object Transforms {
     }
   }
   // scalastyle:on cyclomatic.complexity method.length
+
+  // The expression-positional arms, one builder each over compiled
+  // arguments: the DSL arms above and the SQL registrations in [[Registry]]
+  // both call them, so the two forms cannot drift apart.
+
+  /** concat with `sep`, skipping nulls (:150-156). */
+  private[functions] def concatenate(sep: String, cols: Seq[Column]): Column =
+    concat_ws(sep, cols: _*)
+
+  /** 'T'/'F' pass through, anything else (null included) is `default`
+    * (:158-165). */
+  private[functions] def byteMagic(c: Column, default: Column): Column =
+    when(c === "T", "T").when(c === "F", "F").otherwise(default)
+
+  /** trim; with a default, a null takes it (:241-258). */
+  private[functions] def clearString(c: Column, default: Option[Column]): Column =
+    default.fold(trim(c))(d => when(c.isNotNull, trim(c)).otherwise(d))
+
+  private[functions] def dateToString(c: Column, format: String): Column =
+    date_format(c, format)
+
+  /** null period -> '190001'; else period || lpad(exercise, 2, '0')
+    * (:311-322). */
+  private[functions] def periodMagic(period: Column, exercise: Column): Column =
+    when(period.isNull, "190001")
+      .otherwise(concat(period.cast("string"), lpad(exercise.cast("string"), 2, "0")))
 
   /** `v1|v2->label` rule text -> (values, label). */
   private def parseRule(rule: String): (Seq[String], String) = {

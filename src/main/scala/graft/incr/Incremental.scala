@@ -20,8 +20,7 @@ object Incremental {
   val LimaZone: ZoneId = ZoneId.of("America/Lima")
   val TsFmt: DateTimeFormatter = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
 
-  /** Python `date.toordinal()` of 1900-01-01; ordinal = epochDay + 719163. */
-  val OrdinalAnchor = 693596
+  /** Python `date.toordinal()` = epochDay + 719163. */
   private val EpochOrdinal = 719163L
 
   def toOrdinal(d: LocalDate): Long = d.toEpochDay + EpochOrdinal

@@ -122,9 +122,10 @@ object Graph {
     // reference it, and cross-job exchange reuse does not exist — without
     // this checkpoint an upstream distinct/banding subtree runs per derived
     // table (the Dedup.components lesson). The cuts are LAZY (r13): the
-    // checkpoint cache still gives compute-once across every consumer,
-    // materialized inside the one final job instead of three upfront
-    // blocking driver jobs.
+    // checkpoint cache still gives compute-once across every consumer. A
+    // lazy cut is not job-free: under AQE the shuffle stages below it run
+    // at the call, and only its last stage and the cache fill wait for the
+    // first action that reads it.
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).localCheckpoint(false)
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
@@ -211,9 +212,9 @@ object Graph {
       // e is consumed THREE times per round (degree aggregate + both
       // semi-join probes): a lazy chain with NO cut compounds 3^r subtree
       // evaluations (r12). The cut is LAZY (r13): the checkpoint cache
-      // still gives compute-once across the three consumers, but the
-      // materialization rides the final job instead of a per-round
-      // blocking driver job.
+      // still gives compute-once across the three consumers. The round's
+      // shuffle stages still run at the call (AQE); only its last stage
+      // and the cache fill wait for the next action.
       if (i < rounds) e = e.localCheckpoint(false)
     }
     e.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
@@ -385,7 +386,8 @@ object Graph {
         .select(col("src").as("a"), col("dst").as("b")))
       // deg, the orientation and the wedge join all reference the
       // canonical edge set; evaluate the caller's pipeline once (lazy
-      // cut — compute-once via the checkpoint cache, no upfront job)
+      // cut — compute-once via the checkpoint cache; under AQE its
+      // shuffle stages run at the call, the cache fill waits)
       .localCheckpoint(false)
     val deg = canon.select(col("a").as("node"))
       .union(canon.select(col("b").as("node")))
@@ -464,10 +466,11 @@ object Graph {
       s"ktruss needs 1 <= rounds <= 16, got $rounds")
     // LAZY checkpoint + count fusion (r13): `localCheckpoint(false)` marks
     // the RDD and the `count()` that powers the early exit is the first
-    // action, so ONE job both materializes the cut and returns the count —
-    // r12 paid a separate blocking job for each (eager cut THEN count),
-    // and the extra per-round driver job read slower than r11 in both
-    // driver runs despite the removed zero-join.
+    // action, so the count's jobs also fill the cut's cache. The shuffle
+    // stages below the cut (the distinct, each round's support join) still
+    // run at the call under AQE. r12 paid a separate eager-cut job before
+    // each count, and that per-round driver job read slower than r11 in
+    // both driver runs despite the removed zero-join.
     var e = edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
@@ -488,7 +491,7 @@ object Graph {
         // each round re-derives degrees/orientation from the shrunken set;
         // cut lineage so round r+1 plans against materialized edges, not a
         // growing wedge-join chain — lazily, so the convergence count
-        // below is the materializing action
+        // below fills the cache (the shuffles run at the call, under AQE)
         .localCheckpoint(false)
       // monotone peel: e_r is a SUBSET of e_{r-1}, so equal counts mean the
       // edge set is unchanged — every later round recomputes the identical
@@ -685,10 +688,10 @@ object Graph {
       // absent), so the max anchor and the final output cover the full
       // vertex set every round. |V|-row cut before the max: see the
       // scaladoc — the raw table feeds both the anchor and the scores.
-      // The cut is LAZY (r13): the 1-row max anchor's broadcast collect
-      // is the first action over it, so one job materializes the
-      // checkpoint AND builds the anchor — the eager form paid a
-      // separate blocking job per half-round for the same cut.
+      // The cut is LAZY (r13): its aggregate's shuffle stage runs at the
+      // call (AQE), and the 1-row max anchor's broadcast collect, the
+      // first action over it, also fills the checkpoint cache — the eager
+      // form paid a separate job per half-round for that fill.
       val araw = e.join(hub.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), col("hub").as("m"))
         .union(nodes.withColumn("m", lit(0L)))
@@ -796,8 +799,9 @@ object Graph {
     val e = (if (maxDegree <= 0) e0
       else capDegree(e0, "src", "dst", maxDegree)).localCheckpoint(false)
     // forward: per-source levels + path counts, cut per round (lazily —
-    // all consumers funnel into the single final aggregate job, so the
-    // checkpoint cache gives compute-once with no blocking driver jobs)
+    // the checkpoint cache gives compute-once across the consumers; each
+    // cut's shuffle stages still run at the call under AQE, and only its
+    // last stage and cache fill wait for the final aggregate)
     var lvl = seeds.select(col(seedCol).cast("long").as("s")).distinct()
       .select(col("s"), col("s").as("node"), lit(0L).as("level"),
         lit(1L).as("sigma")).localCheckpoint(false)
@@ -946,8 +950,9 @@ object Graph {
     // blocking jobs, and no 2^r lazy compounding either — the r12
     // per-round cut fixed the compounding but its per-round driver job
     // read SLOWER than the r11 lazy chain in both driver runs. All cuts
-    // are LAZY (compute-once via the checkpoint cache, materialized
-    // inside the one final job) and the node set derives from the CUT
+    // are LAZY (compute-once via the checkpoint cache; under AQE a cut's
+    // shuffle stages run at the call, and only its last stage and cache
+    // fill wait for the final job) and the node set derives from the CUT
     // edge table, never the caller's unmaterialized pipeline (the ANF
     // fold lesson: each lazy arm re-evaluates whatever is not cached).
     val e1 = edges.select(col(srcCol).cast("long").as("src"),
@@ -1354,8 +1359,8 @@ object Graph {
             .groupBy("id").agg(min("lbl").as("lbl"))
         }
         // the final labels feed the guard (twice) and the comp update;
-        // the cut is lazy, so the guard's count below is the one job
-        // that materializes the whole label phase
+        // the cut is lazy: the label rounds' shuffle stages run at the
+        // call (AQE), and the guard's count below fills the cache
         lab = lab.localCheckpoint(false)
         // convergence guard: one more min-label step must be a fixed point
         val next = fe.join(lab.withColumnRenamed("id", "a"), Seq("a"))
@@ -1410,9 +1415,10 @@ object Graph {
     // saturates the graph quickly, so there the trade wins; here it
     // measured 0.94x). Instead the per-round cut is LAZY: `prev` is
     // consumed twice (gate join + keep-current arm), and the checkpoint
-    // cache gives compute-once across both consumers inside the ONE
-    // final job — no 2^r lazy compounding (r12's reason for the cut)
-    // and none of r12's per-round blocking driver jobs either.
+    // cache gives compute-once across both consumers — no 2^r lazy
+    // compounding (r12's reason for the cut). Under AQE each round's
+    // shuffle stages still run at the cut; only the last stage and the
+    // cache fill wait for the final job.
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"),
       col(timeCol).cast("long").as("t")).localCheckpoint(false)

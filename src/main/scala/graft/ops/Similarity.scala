@@ -760,7 +760,8 @@ object Similarity {
     require(k >= 1 && k <= 64, s"mutualKnnPairs needs 1 <= k <= 64, got $k")
     // lazy cut: the mutuality self-join consumes the kNN table twice, and
     // each lazy arm would re-run the whole candidate join + kNN aggregate
-    // (r13; compute-once via the checkpoint cache, no blocking job)
+    // (r13; compute-once via the checkpoint cache; under AQE those
+    // shuffles run at the call, and only the cache fill waits)
     val nn = knnOverCandidates(lshSymPairs(corpus, idCol, vecCol,
       tables, planes, dims, maxBucket, bucketSample), k).select("a", "b")
       .localCheckpoint(false)
@@ -777,7 +778,8 @@ object Similarity {
     // rd, rd feeds lrd AND slrd, kd/lrd are re-read by the final join —
     // left lazy without cuts, the candidate join + kNN aggregate subtree
     // re-evaluated once per arm (~8 evaluations). The checkpoint cache
-    // gives compute-once; all materialize inside the one final job.
+    // gives compute-once; each cut's shuffle stages run at its call (AQE),
+    // and the cache fills wait for the final job.
     val nbrs = knnOverCandidates(lshSymPairs(corpus, idCol, vecCol,
       tables, planes, dims, maxBucket, bucketSample), k)
       .localCheckpoint(false)

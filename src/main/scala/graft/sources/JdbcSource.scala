@@ -106,13 +106,21 @@ object JdbcSource {
     * [START_VALUE, END_VALUE] — the native form of the reference's
     * thread-split (S3). */
   def readIncremental(spark: SparkSession, e: EndpointConfig, t: TableConfig,
-      password: String, numPartitions: Int = 100): DataFrame = {
-    val (url, driver) = urlAndDriver(e)
-    val table =
-      s"(${Incremental.fullQuery(t.sourceSchema, t.sourceTable, t.columns,
-        t.idColumn, t.joinExpr)}) src"
-    readPartitioned(spark, url, driver, table,
-      t.filterColumn.split(",").head.trim, t.startValue, t.endValue,
-      numPartitions, e.srcDbUsername, password)
+      password: String, numPartitions: Int = 100): DataFrame =
+    spark.read.format("jdbc")
+      .options(incrementalOptions(e, t, password, numPartitions)).load()
+
+  /** Option map of [[readIncremental]]: the endpoint's [[options]] (dialect
+    * URL and driver, credentials, fetch size and Oracle's session init, S2)
+    * reading the generated query as `dbtable`, split on the first filter
+    * column over [START_VALUE, END_VALUE]. */
+  private[graft] def incrementalOptions(e: EndpointConfig, t: TableConfig,
+      password: String, numPartitions: Int): Map[String, String] = {
+    val query = Incremental.fullQuery(t.sourceSchema, t.sourceTable, t.columns,
+      t.idColumn, t.joinExpr)
+    (options(e, query, password, numPartitions) - "query") ++ Map(
+      "dbtable" -> s"($query) src",
+      "partitionColumn" -> t.filterColumn.split(",").head.trim,
+      "lowerBound" -> t.startValue, "upperBound" -> t.endValue)
   }
 }

@@ -692,7 +692,8 @@ object StreamingIngest {
   /**
    * CDC stream into an SCD-2 HISTORY table: each micro-batch closes changed
    * versions and opens new ones through `MergeWriter.scd2Merge`; the first
-   * batch bootstraps. The version label is derived from the BATCH ID, not
+   * batch with rows bootstraps (an empty one writes no data file, so
+   * `MergeWriter.tableExists` still finds no table). The version label is derived from the BATCH ID, not
    * wall clock, so a checkpoint-replayed batch re-merges with the SAME
    * label against rows that already carry its values — a no-op — giving
    * at-least-once replay convergence just like [[mergeSink]]. That rests on
@@ -730,10 +731,7 @@ object StreamingIngest {
               .scd2Merge(tgt.drop("scd_part"), b.drop("scd_part"),
                 ids, versionOf(batchId), recency)
               .withColumn("scd_part", part))
-        } else if (!batch.isEmpty) {
-          // an EMPTY first micro-batch must not bootstrap: it would write a
-          // _SUCCESS with zero parquet files, tableExists would then route
-          // every later batch into a schema-less read of the empty table
+        } else {
           val boot = graft.write.MergeWriter
             .scd2Bootstrap(graft.pipeline.StageTransform
                 .dedupLatest(batch, ids, recency), versionOf(batchId))

@@ -1,10 +1,9 @@
 package graft.write
 
-import java.nio.file.Paths
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics, CatalogTablePartition, ExternalCatalogUtils}
+import org.apache.spark.sql.catalyst.catalog.{CatalogStatistics, CatalogTablePartition}
 import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType}
 
@@ -18,8 +17,8 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, Lo
  *
  *  - [[registerStage]] diffs disk against the catalog: schema from the
  *    parquet footers ([[ParquetFooters]], cached, so a warm day opens only
- *    the new files' footers) and partitions from the leaf directories. A
- *    warm registration launches no Spark job.
+ *    the new files' footers) and partitions from the directories of the
+ *    same live files. A warm registration launches no Spark job.
  *  - [[refreshStats]] writes the optimizer's statistics from the same
  *    footers (rowCount, sizeInBytes, per-id min/max/nulls) plus a distinct
  *    count that was observed inside the write job or is provable from key
@@ -52,12 +51,13 @@ object CatalogRegistry {
    *    TABLE ... ADD COLUMNS`, merge schema evolution; a pruned merge writes
    *    an evolved column into some files only, and the union sees it), then
    *    `REFRESH TABLE` for rewritten files.
-   *  - Partitioned tables: the on-disk leaf directories are diffed against
-   *    the catalog's partitions, and exactly the difference is added and
-   *    dropped (the data stays), with names unescaped and
-   *    `__HIVE_DEFAULT_PARTITION__` kept as `MSCK REPAIR ... SYNC
-   *    PARTITIONS` keeps it. A window merge that empties a period therefore
-   *    leaves no dangling catalog partition.
+   *  - Partitioned tables: the leaf partitions of the live files the
+   *    footer read already listed (one walk of the table per registration)
+   *    are diffed against the catalog's partitions, and exactly the
+   *    difference is added and dropped (the data stays), with names
+   *    unescaped and `__HIVE_DEFAULT_PARTITION__` kept as `MSCK REPAIR ...
+   *    SYNC PARTITIONS` keeps it. A window merge that empties a period
+   *    therefore leaves no dangling catalog partition.
    *
    * Writes no statistics: that is [[refreshStats]] (or [[analyzeStage]]),
    * run after registration.
@@ -68,7 +68,8 @@ object CatalogRegistry {
     if (!catalog.databaseExists(db)) ensureDatabase(spark, db)
     val ident = TableIdentifier(table, Some(db))
     val full = s"`$db`.`$table`"
-    val written = ParquetFooters.unionSchema(ParquetFooters.of(path))
+    val footers = ParquetFooters.of(path)
+    val written = ParquetFooters.unionSchema(footers)
     if (!catalog.tableExists(ident)) {
       require(written.nonEmpty, s"no parquet data files under $path to register")
       // with the data schema given, the read infers only the partition
@@ -79,7 +80,7 @@ object CatalogRegistry {
         else partitionCols.mkString("PARTITIONED BY (", ", ", ")")
       spark.sql(s"CREATE TABLE IF NOT EXISTS $full ($ddl) USING PARQUET " +
         s"$partClause LOCATION '$path'")
-      syncPartitions(spark, ident, path)
+      syncPartitions(spark, ident, footers.keys)
     } else {
       val known = catalog.getTableMetadata(ident).schema
         .fieldNames.map(_.toLowerCase).toSet
@@ -87,30 +88,23 @@ object CatalogRegistry {
       if (added.nonEmpty)
         spark.sql(s"ALTER TABLE $full ADD COLUMNS (" +
           added.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ") + ")")
-      syncPartitions(spark, ident, path)
+      syncPartitions(spark, ident, footers.keys)
       spark.catalog.refreshTable(full)
     }
   }
 
-  /** Make the catalog's partitions equal the leaf directories under `path`. */
+  /** Make the catalog's partitions equal the leaf partitions of the live
+    * `files` (relative paths, [[ParquetFooters.partitions]]). */
   private def syncPartitions(spark: SparkSession, ident: TableIdentifier,
-      path: String): Unit = {
+      files: Iterable[String]): Unit = {
     val catalog = spark.sessionState.catalog
     val meta = catalog.getTableMetadata(ident)
     val names = meta.partitionColumnNames
     if (names.nonEmpty) {
       val root = new Path(meta.location)
-      val onDisk = MergeWriter.leafPartitionDirs(Paths.get(path), names.length)
-        .map(_.toString).flatMap { rel =>
-          val kv = rel.split('/').toSeq.map { seg =>
-            val eq = seg.indexOf('=')
-            ExternalCatalogUtils.unescapePathName(seg.substring(0, eq)) ->
-              ExternalCatalogUtils.unescapePathName(seg.substring(eq + 1))
-          }
-          if (kv.map(_._1).zip(names).forall { case (a, b) => a.equalsIgnoreCase(b) })
-            Some(names.zip(kv.map(_._2)).toMap -> new Path(root, rel).toUri)
-          else None // not a partition of this table, as MSCK skips it
-        }.toMap
+      val onDisk = ParquetFooters.partitions(files, names).map { case (dir, vals) =>
+        names.zip(vals).toMap -> new Path(root, dir).toUri
+      }
       val inCatalog = catalog.listPartitions(ident).map(_.spec).toSet
       val added = onDisk.keySet -- inCatalog
       val dropped = inCatalog -- onDisk.keySet

@@ -1,6 +1,6 @@
 package graft.write
 
-import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
@@ -58,18 +58,20 @@ object MergeWriter {
     * [[write]] and the streaming sinks route on. Rolls back a publish a
     * crash interrupted first (see [[writeSwap]]): with `path` missing,
     * `path.__old` is the last complete version and moves back; with both
-    * present, the new version is complete and `path.__old` is deleted. */
+    * present, the new version is complete and `path.__old` is deleted.
+    *
+    * A table is present when `path` holds a live data file, by the rule
+    * every read of the table uses ([[ParquetFooters.dataFiles]]); the walk
+    * stops at the first file. A directory holding only a `_SUCCESS` marker
+    * (what an empty partitioned write leaves) is no table, so the next
+    * write bootstraps it, and a partitioned table is present whether or
+    * not the committer wrote a marker. */
   def tableExists(path: String): Boolean = {
     val (dir, old) = (Paths.get(path), Paths.get(path + ".__old"))
     if (Files.exists(old))
       if (Files.exists(dir)) FileUtils.deleteDirectory(old.toFile)
       else Files.move(old, dir, StandardCopyOption.ATOMIC_MOVE)
-    Files.isDirectory(dir) && {
-      val s = Files.list(dir)
-      try s.anyMatch(p => p.toString.endsWith(".parquet") ||
-        p.getFileName.toString == "_SUCCESS")
-      finally s.close()
-    }
+    ParquetFooters.hasData(path)
   }
 
   /** Align `df` to the union schema: missing columns become typed nulls
@@ -289,6 +291,8 @@ object MergeWriter {
 
   /** Whole-table write: `df` goes to `<path>.__tmp` (never read and
     * overwrite the same files in one job), then [[publish]] swaps it in.
+    * I/O: one write job over `df`; the driver lists the new version and
+    * reads the footers of its files to count the rows written.
     *
     * Invariant: publish is crash-atomic. A crash or a failed attempt at any
     * point leaves either the complete old version or the complete new one,
@@ -297,18 +301,25 @@ object MergeWriter {
     * find it missing. Tables that need concurrent readers use
     * [[SnapshotStore]] (versioned directories, pointer flip, vacuum). */
   def writeSwap(df: DataFrame, path: String, partitionCols: Seq[String] = Nil): Long =
-    observedSwap(df, path, partitionCols, Nil)._1
+    commit(df, path, partitionCols, Nil, Nil)._1
 
-  /** [[writeSwap]] that also returns the distinct count of each of
-    * `ndvCols`, observed inside the write job (`Dataset.observe`, no extra
-    * job) with `approx_count_distinct` at `spark.sql.statistics.ndv.maxError`
-    * — the estimator and relative error `ANALYZE ... FOR COLUMNS` uses, so
-    * over the same rows the value is ANALYZE's. The frame written is the
-    * whole table. Each call (each retry attempt) uses a fresh Observation;
-    * metrics that have not arrived a minute after the write give no counts
-    * (the catalog then falls back), never a hung write. */
-  private def observedSwap(df: DataFrame, path: String, partitionCols: Seq[String],
-      ndvCols: Seq[String]): (Long, Map[String, Long]) = {
+  /** The commit tail every write route ends in. `df` is written to
+    * `path.__tmp`, partitioned on `partitionCols`. Each live file of
+    * `carried` (relative to `path`) whose partition the write did not
+    * produce is hard-linked into tmp, [[publish]] swaps tmp in, and the
+    * rows written are those of the files not carried.
+    *
+    * With `ndvCols` (whole-table routes only: the frame must be the whole
+    * table) it also returns each column's distinct count, observed inside
+    * the write job (`Dataset.observe`, no extra job) with
+    * `approx_count_distinct` at `spark.sql.statistics.ndv.maxError` — the
+    * estimator and relative error `ANALYZE ... FOR COLUMNS` uses, so over
+    * the same rows the value is ANALYZE's. Each call (each retry attempt)
+    * uses a fresh Observation; metrics that have not arrived a minute after
+    * the write give no counts (the catalog then falls back), never a hung
+    * write. */
+  private def commit(df: DataFrame, path: String, partitionCols: Seq[String],
+      ndvCols: Seq[String], carried: Seq[String]): (Long, Map[String, Long]) = {
     val cols = ndvCols.filter(df.columns.contains)
     val obs = Observation()
     val rsd = df.sparkSession.conf.get("spark.sql.statistics.ndv.maxError").toDouble
@@ -318,14 +329,27 @@ object MergeWriter {
     val writer = observed.write.mode(SaveMode.Overwrite)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(tmp)
+    val tmpRoot = Paths.get(tmp)
+    lazy val written =
+      ParquetFooters.partitions(ParquetFooters.dataFiles(tmp), partitionCols).keySet
+    val links = carried.filterNot(rel => written(dirOf(rel)))
+    for (rel <- links) {
+      val dest = tmpRoot.resolve(rel)
+      Files.createDirectories(dest.getParent)
+      Files.createLink(dest, Paths.get(path).resolve(rel))
+    }
     publish(tmp, path)
-    val rows = ParquetFooters.of(path).values.map(_.rows).sum
+    val linked = links.toSet
+    val rows = ParquetFooters.of(path).collect { case (rel, f) if !linked(rel) => f.rows }.sum
     val counts =
       if (cols.nonEmpty) scala.util.Try(scala.concurrent.Await.result(obs.future,
         scala.concurrent.duration.Duration(1, "minute"))).toOption
       else None
     (rows, counts.fold(Map.empty[String, Long])(_.getValuesMap[Long](cols)))
   }
+
+  /** The directory of a file path relative to a table, "" at its root. */
+  private def dirOf(rel: String): String = rel.take(rel.lastIndexOf('/'))
 
   /** Test hook called as `(path, step)` after each filesystem step of
     * [[publish]]; a kill-point test throws from it. */
@@ -363,13 +387,18 @@ object MergeWriter {
     * partition values plus any partitions matching `alsoTouched` (the
     * transactional-window delete range). Only those partitions are read —
     * the scan's PartitionFilters skip every other directory — merged via
-    * `merge` and written partitioned to a tmp dir. Every other on-disk
-    * partition directory is hard-linked into tmp unchanged (same files,
+    * `merge` and written partitioned to a tmp dir. The live data files of
+    * every other partition are hard-linked into tmp unchanged (same files,
     * same bytes; no data is read), and [[publish]] swaps tmp in whole.
     * Touched partitions that end up EMPTY after the merge (a fully deleted
-    * window period) are therefore gone. Data I/O is O(touched partitions);
-    * the driver adds one link per carried-over file and one unlink per
-    * file of the old version.
+    * window period) are therefore gone, and a merge that empties every
+    * partition leaves no table (see [[tableExists]]).
+    *
+    * I/O: data is read and written for the touched partitions only. The
+    * partitions on disk come from the table's live-file listing
+    * ([[ParquetFooters.partitions]]), never from a data scan; the driver
+    * adds one link per carried-over file and one unlink per file of the
+    * old version, and reads the footers of the files the merge wrote.
     *
     * The batch is evaluated once: it is held `MEMORY_AND_DISK` for the
     * write (unless the caller already cached it), so the touched-partition
@@ -395,32 +424,28 @@ object MergeWriter {
       val pc = partitionCols.map(col)
       val target = readTable(spark, path)
       val batchVals = batch.select(pc: _*).distinct().collect()
-      // Existing partition VALUES come from the DIRECTORY STRUCTURE (one
-      // listing, O(partitions)), not from a `select(partCols).distinct()`
-      // data scan — that enumerates one row per TABLE row, which at 100 TB
-      // is a full-table pass just to learn ~10^3 partition values. The
-      // parsed strings are cast to the target's partition types and every
+      // Existing partition VALUES come from the live-file listing (O(files),
+      // no data read), not from a `select(partCols).distinct()` data scan —
+      // that enumerates one row per TABLE row, which at 100 TB is a
+      // full-table pass just to learn ~10^3 partition values. The parsed
+      // strings are cast to the target's partition types and every
       // predicate below evaluates over that tiny local frame; keeping the
       // on-disk relative path alongside the typed values is also how touched
       // directories are located — matching parsed leaf dirs, never
       // re-rendering values (Timestamp.toString and friends do not
       // round-trip Spark's write-side partition-path formatting).
       val dirCol = "__graft_dir"
-      val diskDirs = leafPartitionDirs(Paths.get(path), partitionCols.length)
-      val parsed = diskDirs.map { rel =>
-        rel.toString +: rel.toString.split("/").map { seg =>
-          val raw = ExternalCatalogUtils
-            .unescapePathName(seg.substring(seg.indexOf('=') + 1))
-          if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-          else raw
-        }.toSeq
+      val files = ParquetFooters.dataFiles(path)
+      val disk = ParquetFooters.partitions(files, partitionCols)
+      val parsed = disk.toSeq.map { case (dir, vals) =>
+        Row(dir +: vals.map(v =>
+          if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else v): _*)
       }
       val strSchema = org.apache.spark.sql.types.StructType(
         (dirCol +: partitionCols).map(c => org.apache.spark.sql.types
           .StructField(c, org.apache.spark.sql.types.StringType, true)))
       val typeOf = target.schema.fields.map(f => f.name -> f.dataType).toMap
-      val diskDf = spark.createDataFrame(
-          java.util.Arrays.asList(parsed.map(Row(_: _*)): _*), strSchema)
+      val diskDf = spark.createDataFrame(parsed.asJava, strSchema)
         .select(col(dirCol) +:
           partitionCols.map(c => col(c).cast(typeOf(c)).as(c)): _*)
       val extraVals =
@@ -435,42 +460,14 @@ object MergeWriter {
           if (v == null) col(c).isNull else col(c) === lit(v)
         }.reduce(_ && _)).reduce(_ || _)
 
-      val merged = merge(target.filter(pred), batch)
-      val tmp = path + ".__tmp"
-      merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-        .parquet(tmp)
-
-      // Carried over = every on-disk leaf dir minus those the touched
-      // predicate selects (a set difference: a NULL-valued predicate keeps a
-      // directory rather than dropping it) and those the merge wrote anew.
-      val tmpRoot = Paths.get(tmp)
-      val touchedDirs = diskDf.filter(pred).select(dirCol).collect().map(_.getString(0))
-      val written = leafPartitionDirs(tmpRoot, partitionCols.length).map(_.toString)
-      val keep = diskDirs.map(_.toString).filterNot((touchedDirs ++ written).toSet)
-      for (rel <- keep) {
-        val dest = Files.createDirectories(tmpRoot.resolve(rel))
-        val s = Files.list(Paths.get(path).resolve(rel))
-        try s.iterator().asScala.filter(Files.isRegularFile(_))
-          .foreach(f => Files.createLink(dest.resolve(f.getFileName), f))
-        finally s.close()
-      }
-      publish(tmp, path)
-      // rows written = the files of the partitions the merge wrote
-      ParquetFooters.of(path).collect { case (rel, f)
-        if Option(Paths.get(rel).getParent).exists(d => written.contains(d.toString)) =>
-          f.rows
-      }.sum
+      // Carried over = the files of every on-disk partition the touched
+      // predicate does not select (a set difference: a NULL-valued
+      // predicate keeps a directory rather than dropping it); the commit
+      // also keeps out those the merge wrote anew.
+      val touchedDirs = diskDf.filter(pred).select(dirCol).collect().map(_.getString(0)).toSet
+      val carried = files.filter(f => disk.contains(dirOf(f)) && !touchedDirs(dirOf(f)))
+      commit(merge(target.filter(pred), batch), path, partitionCols, Nil, carried)._1
     } finally if (own) batch.unpersist()
-  }
-
-  /** Relative paths of the depth-`n` partition directories under `root`. */
-  private[write] def leafPartitionDirs(root: JPath, n: Int): Seq[JPath] = {
-    val s = Files.walk(root, n)
-    try s.iterator().asScala
-      .filter(p => root.relativize(p).getNameCount == n && Files.isDirectory(p)
-        && p.getFileName.toString.contains("="))
-      .map(root.relativize).toSeq
-    finally s.close()
   }
 
   /** K7 — table maintenance. The reference's `vacuum(100)` + symlink manifest
@@ -509,7 +506,11 @@ object MergeWriter {
 
   /** Full load-mode-routed write (reference flow aje-stage-dms-load.py:470-518
     * + transform_light.py:388-417). Throws NoDataToMigrateException after
-    * bootstrapping an empty table, as the reference does (K6).
+    * bootstrapping an empty table, as the reference does (K6). An empty
+    * unpartitioned bootstrap leaves a table of one empty file that carries
+    * the schema, and the next batch merges into it; an empty partitioned
+    * bootstrap writes no data file, so it leaves no table (see
+    * [[tableExists]]) and the next batch bootstraps again.
     *
     * Each route evaluates the batch in only the executions it needs: the
     * whole-table routes in their one write, the pruned routes once into the
@@ -564,7 +565,7 @@ object MergeWriter {
     val pruned = partitionCols.nonEmpty && stable &&
       (!window.isDefined || partitionCols.contains("processperiod"))
     def swapStats(route: String, table: DataFrame): MergeStats = {
-      val (rows, ndv) = observedSwap(table, path, partitionCols, ids)
+      val (rows, ndv) = commit(table, path, partitionCols, ids, Nil)
       MergeStats(route, rows, ndv)
     }
     val stats = withRetry(3, retrySleepMs) {

@@ -8,16 +8,20 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, IntLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /**
- * The parquet footers of a stage table's live data files — the one place
- * the library opens a footer. The writer sums their record counts and
- * reads its targets by their union schema, and the catalog derives its
- * statistics from them (Delta's per-file `stats` in
- * each add action, aje-stage-dms-load.py:470-518, read back from the
- * footers parquet already writes).
+ * The live data files of a stage table and their parquet footers — the one
+ * reader of a stage directory's layout and the one place the library opens
+ * a footer. Whether a table exists, which partitions it holds and which
+ * files a pruned merge carries over all come from the same live-file rule
+ * ([[dataFiles]]). The writer sums the footers' record counts and reads its
+ * targets by their union schema, and the catalog derives its statistics
+ * from them (Delta's per-file `stats` in each add action,
+ * aje-stage-dms-load.py:470-518, read back from the footers parquet already
+ * writes).
  *
  * Footers are cached per table by relative path. Spark data file names
  * carry a per-job UUID, files are immutable, and a pruned merge carries
@@ -43,22 +47,48 @@ private[graft] object ParquetFooters {
 
   private val cache = new ConcurrentHashMap[String, Map[String, Footer]]()
 
-  /** Relative path -> footer of every live data file under `table` (names
-    * starting with `_` or `.` are skipped at every level, as Spark's file
-    * index and `calculateTotalSize` skip them). */
+  /** Relative path -> footer of every live data file under `table` (see
+    * [[dataFiles]]). */
   def of(table: String): Map[String, Footer] = {
     val root = Paths.get(table).toAbsolutePath.normalize
     val key = root.toString
     val known = Option(cache.get(key)).getOrElse(Map.empty[String, Footer])
     val conf = new Configuration()
-    val live = dataFiles(root).map { p =>
-      val rel = root.relativize(p).toString
+    val live = dataFiles(key).map { rel =>
+      val p = root.resolve(rel)
       val len = Files.size(p)
       rel -> known.get(rel).filter(_.length == len).getOrElse(read(p, len, conf))
     }.toMap
     if (live.isEmpty) cache.remove(key) else cache.put(key, live)
     live
   }
+
+  /** Relative paths of the live data files under `table`: regular files
+    * with no path segment starting with `_` or `.`, as Spark's file index
+    * and `calculateTotalSize` skip them. A directory holding only markers
+    * (`_SUCCESS`) or checksums has none. */
+  def dataFiles(table: String): Seq[String] = liveFiles(table, Long.MaxValue)
+
+  /** Whether `table` holds a live data file; the walk stops at the first. */
+  def hasData(table: String): Boolean = liveFiles(table, 1).nonEmpty
+
+  /** The leaf partitions of a table partitioned on `names`, from the
+    * relative paths of its live files: each file's parent directory
+    * `names.length` levels deep whose segments are `name=value` with
+    * `names` in order (case-insensitive, as Spark resolves them), mapped to
+    * its unescaped values. Files elsewhere belong to no partition, as Spark's
+    * partition discovery and `MSCK` skip them. The one parser of partition
+    * path segments. */
+  def partitions(files: Iterable[String], names: Seq[String]): Map[String, Seq[String]] =
+    files.flatMap { rel =>
+      val segs = rel.split('/').toSeq.dropRight(1)
+      val kv = segs.map(_.split("=", 2)).collect { case Array(k, v) =>
+        ExternalCatalogUtils.unescapePathName(k) -> ExternalCatalogUtils.unescapePathName(v)
+      }
+      if (kv.length == segs.length && kv.map(_._1).corresponds(names)(_.equalsIgnoreCase(_)))
+        Some(segs.mkString("/") -> kv.map(_._2))
+      else None
+    }.toMap
 
   /** The union of the files' schemas, first appearance first (files in
     * path order). */
@@ -74,16 +104,19 @@ private[graft] object ParquetFooters {
     n.startsWith("_") || n.startsWith(".")
   }
 
-  private def dataFiles(root: JPath): Seq[JPath] =
+  /** Relative paths of the first `limit` live data files under `table`, in
+    * walk order. */
+  private def liveFiles(table: String, limit: Long): List[String] = {
+    val root = Paths.get(table)
     if (!Files.isDirectory(root)) Nil
     else {
       val s = Files.walk(root)
-      try s.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          !root.relativize(p).iterator().asScala.exists(hidden))
-        .toSeq
+      try s.filter(Files.isRegularFile(_)).map(root.relativize(_))
+        .filter(!_.iterator().asScala.exists(hidden))
+        .limit(limit).iterator().asScala.map(_.toString).toList
       finally s.close()
     }
+  }
 
   private def read(p: JPath, len: Long, conf: Configuration): Footer = {
     val r = ParquetFileReader.open(

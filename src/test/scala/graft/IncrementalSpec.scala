@@ -159,6 +159,25 @@ class IncrementalSpec extends AnyFunSuite {
     assert(!my.contains("sessionInitStatement"))
   }
 
+  test("JDBC incremental option map: the endpoint's options, bounded on the watermark (S2/S3)") {
+    val t = TableConfig("T", "E", "SCH", "ORDERS", "stage", loadType = "incremental",
+      filterColumn = "UPDATED_AT, CREATED_AT", startValue = "2024-01-01 00:00:00",
+      endValue = "2024-01-31 23:59:59", idColumn = "ORDER_ID", columns = "AMOUNT")
+    val ora = JdbcSource.incrementalOptions(
+      EndpointConfig("E", "oracle", "h", 1521, "DB", "u", "sec"), t, "pw", 8)
+    assert(ora("url") == "jdbc:oracle:thin:@h:1521/DB" && ora("user") == "u")
+    assert(ora.contains("sessionInitStatement"))
+    assert(ora("oracle.jdbc.mapDateToTimestamp") == "true")
+    assert(!ora.contains("query"))
+    assert(ora("dbtable") == s"(${Incremental.fullQuery("SCH", "ORDERS", "AMOUNT", "ORDER_ID")}) src")
+    assert(ora("partitionColumn") == "UPDATED_AT" && ora("numPartitions") == "8")
+    assert(ora("lowerBound") == t.startValue && ora("upperBound") == t.endValue)
+    val my = JdbcSource.incrementalOptions(
+      EndpointConfig("E", "mysql", "h", 3306, "DB", "u", "s"), t, "pw", 8)
+    assert(!my.contains("sessionInitStatement") && !my.contains("oracle.jdbc.mapDateToTimestamp"))
+    assert(my("lowerBound") == t.startValue && my("upperBound") == t.endValue)
+  }
+
   test("changedPartitions: add/remove/change/unchanged, order-independent") {
     val spark = SparkSpec.spark
     import spark.implicits._

@@ -83,6 +83,18 @@ class SessionSpec extends SparkSpec {
     assert(holders("""ParquetFileReader\s*\.\s*open""") == Set("ParquetFooters.scala"))
   }
 
+  test("the write layer lists a stage directory only through its layout owners") {
+    val dir = Paths.get("src/main/scala/graft/write")
+    val listers = Files.list(dir).iterator.asScala.toSeq
+      .filter(p => """Files\s*\.\s*(?:walk|list)\s*\(""".r
+        .findFirstIn(code(Files.readString(p))).isDefined)
+      .map(_.getFileName.toString).toSet
+    // ParquetFooters owns the live-file rule stage tables are read by, and
+    // SnapshotStore its own versioned layout
+    assert(listers.nonEmpty && listers.subsetOf(Set("ParquetFooters.scala", "SnapshotStore.scala")),
+      listers)
+  }
+
   test("the writer takes its metadata from footers and the write, not jobs") {
     val writer = mainSources.collect { case ("MergeWriter.scala", src) => src }
     assert(writer.size == 1, "MergeWriter.scala not found")

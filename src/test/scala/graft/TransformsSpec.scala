@@ -171,4 +171,34 @@ class TransformsSpec extends SparkSpec {
     assert(math.abs(got + 5L * 3600 * 1000 - t0) < 120000,
       s"wall-clock now() drifted: $got vs $t0")
   }
+
+  /** Rows with a null in every argument position, for the SQL-form cases. */
+  private val formRows = """VALUES
+      ('T', 'x', DATE'2024-03-05', 2024, 3),
+      ('F', NULL, NULL, NULL, 11),
+      (NULL, 'y', DATE'2024-12-31', 2023, NULL),
+      (' X ', NULL, NULL, 2024, 1),
+      (NULL, NULL, NULL, NULL, NULL) AS v(a, b, d, p, e)"""
+
+  // each expression-positional SQL registration against its DSL arm
+  for ((name, forms) <- Seq(
+      "concatenate" -> Seq("fn_transform_concatenate(a, b)" -> "fn_transform_Concatenate(a,b)"),
+      "concatenate_ws" ->
+        Seq("fn_transform_concatenate_ws(a, b, '-')" -> "fn_transform_Concatenate_ws(a,b,-)"),
+      "bytemagic" -> Seq("fn_transform_bytemagic(a, b)" -> "fn_transform_ByteMagic(a,b)"),
+      "clearstring" -> Seq(
+        "fn_transform_clearstring(a, b)" -> "fn_transform_ClearString(a,b)",
+        "fn_transform_clearstring(a)" -> "fn_transform_ClearString(a)"),
+      "date_to_string" -> Seq("fn_transform_date_to_string(d, 'yyyyMMdd')" ->
+        "fn_transform_Date_to_String(d,yyyyMMdd)"),
+      "periodmagic" -> Seq("fn_transform_periodmagic(p, e)" -> "fn_transform_PeriodMagic(p,e)")))
+    test(s"fn_transform_$name: the SQL form equals the DSL form, nulls included") {
+      for ((sqlForm, dsl) <- forms) {
+        val got = spark.sql(
+          s"SELECT $sqlForm AS s, fn_transform('$dsl') AS d FROM $formRows").collect()
+        assert(got.forall(r => r.get(0) == r.get(1)), got.mkString(", "))
+        // the rows tell the forms apart: more than a null and one value
+        assert(got.map(_.get(0)).distinct.length > 2, got.mkString(", "))
+      }
+    }
 }
