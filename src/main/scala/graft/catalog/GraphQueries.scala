@@ -82,15 +82,6 @@ private[graft] object GraphQueries {
               AS r_micro
           FROM m""")),
 
-    // Fixed-round k-core peel (Graph.kCore) over the sampled co-order
-    // graph — density filtering of the similarity graph. k=16 sits below
-    // the graph's scale-stable median degree (~23 at every SF), so
-    // the peel is non-trivial at smoke, oracle and bench scales alike.
-    // Community detection via fixed-round synchronous label propagation
-    // (Graph.labelPropagation) over the sampled co-order graph — the
-    // DENSE-region structure, where q_dedup_clusters* find mere
-    // connectivity. 4 rounds + total tie order = deterministic; the
-    // oracle unrolls the rounds as mode-per-node CTEs.
     // One synchronous Louvain phase (Graph.louvainOnePass) on the
     // part<->supplier graph: every node's best modularity-gain move from
     // singleton communities, gain in the exact integer form 2m - k_i*k_j
@@ -123,20 +114,16 @@ private[graft] object GraphQueries {
             CAST(gain AS BIGINT) AS gain_scaled
           FROM best WHERE rn = 1""")),
 
+    // Community detection via fixed-round synchronous label propagation
+    // (Graph.labelPropagation) over the sampled co-order graph — the
+    // DENSE-region structure, where q_dedup_clusters* find mere
+    // connectivity. 4 rounds + total tie order = deterministic; the
+    // oracle unrolls the rounds as mode-per-node CTEs.
     ("q_graph_communities", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
         // lazy cut (r13): both symmetrize arms read canon
-        val canon = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("a"), col("pk2").as("b")).distinct()
-          .localCheckpoint(false)
-        val e = canon.select(col("a").as("src"), col("b").as("dst"))
-          .union(canon.select(col("b").as("src"), col("a").as("dst")))
-        Graph.labelPropagation(e, "src", "dst", rounds = 4)
+        val canon = coOrderPairs(s, d).distinct().localCheckpoint(false)
+        Graph.labelPropagation(bothWays(canon), "src", "dst", rounds = 4)
       }): Q
       },
       Some(lpaOracleSql(4))),
@@ -154,18 +141,10 @@ private[graft] object GraphQueries {
     // broadcast. Contribution is one fixed IEEE chain over exact BIGINTs.
     ("q_graph_modularity", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
         // lazy cut (r13): canon feeds both symmetrize arms, the
         // intra-community join and the m anchor — one self-join pass
-        val canon = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("a"), col("pk2").as("b")).distinct()
-          .localCheckpoint(false)
-        val e = canon.select(col("a").as("src"), col("b").as("dst"))
-          .union(canon.select(col("b").as("src"), col("a").as("dst")))
+        val canon = coOrderPairs(s, d).distinct().localCheckpoint(false)
+        val e = bothWays(canon)
         val labels = Graph.labelPropagation(e, "src", "dst", rounds = 4)
           .localCheckpoint(false)
         val deg = e.groupBy(col("src").as("node"))
@@ -174,10 +153,10 @@ private[graft] object GraphQueries {
           .groupBy("label")
           .agg(count(lit(1)).as("n_nodes"), sum("deg").as("d_c"))
         val ec = canon
-          .join(labels.select(col("node").as("a"), col("label").as("la")),
-            Seq("a"))
-          .join(labels.select(col("node").as("b"), col("label").as("lb")),
-            Seq("b"))
+          .join(labels.select(col("node").as("src"), col("label").as("la")),
+            Seq("src"))
+          .join(labels.select(col("node").as("dst"), col("label").as("lb")),
+            Seq("dst"))
           .filter(col("la") === col("lb"))
           .groupBy(col("la").as("label")).agg(count(lit(1)).as("e_c"))
         val m = canon.agg(count(lit(1)).as("m"))
@@ -214,18 +193,14 @@ private[graft] object GraphQueries {
             AS BIGINT) AS q_micro
         FROM dc LEFT JOIN ec ON dc.label = ec.label, mm""")),
 
+    // Fixed-round k-core peel (Graph.kCore) over the sampled co-order
+    // graph — density filtering of the similarity graph. k=16 sits below
+    // the graph's scale-stable median degree (~23 at every SF), so
+    // the peel is non-trivial at smoke, oracle and bench scales alike.
     ("q_graph_kcore", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val canon = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("a"), col("pk2").as("b")).distinct()
-        val e = canon.select(col("a").as("src"), col("b").as("dst"))
-          .union(canon.select(col("b").as("src"), col("a").as("dst")))
-        Graph.kCore(e, "src", "dst", k = 16, rounds = 4)
+        Graph.kCore(bothWays(coOrderPairs(s, d).distinct()), "src", "dst",
+          k = 16, rounds = 4)
       }): Q
       },
       Some(kCoreOracleSql(k = 16, rounds = 4))),
@@ -239,19 +214,7 @@ private[graft] object GraphQueries {
     // 100 TB-safe shape (a hub never owns its whole neighborhood).
     ("q_graph_triangles", {
       ((s: SparkSession, d: String) => {
-        // every fifth order: the co-order projection densifies
-        // quadratically with corpus size (a part's degree grows with its
-        // order count), so the BENCH graph is a deterministic order sample
-        // — the plan shape (and the oriented-wedge bound) is what scales,
-        // not the constant
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val e = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("src"), col("pk2").as("dst"))
-        Graph.triangleCounts(e, "src", "dst")
+        Graph.triangleCounts(coOrderPairs(s, d), "src", "dst")
       }): Q
       },
       Some("""WITH lp AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
@@ -286,39 +249,17 @@ private[graft] object GraphQueries {
             ELSE 0.0 END AS clustering
           FROM deg d LEFT JOIN pn ON d.node = pn.node""")),
 
-    // The STRUCTURAL hub guard, oracle-verified: the same co-order graph
-    // as q_graph_triangles but degree-capped with Graph.capDegree
-    // (maxDegree=8) before counting — per-node deterministic bottom-k by
-    // md5("src|dst") rank, an edge surviving only at both endpoints. The
-    // oracle replays the sampling exactly (row_number over the md5 order,
-    // keep rank<=8, count(*)=2), then the full oriented-wedge pipeline on
-    // the capped subgraph — proving the capped result is EXACT on the
-    // sampled subgraph, not merely "bounded". maxDegree is what makes a
-    // hub-degenerate derived graph safe at corpus scale (wedge fan-out
-    // <= cap, no quadratic key).
     // Deterministic random walks (Graph.randomWalks) over the CAPPED
     // symmetrized co-order graph — the DeepWalk/node2vec corpus
     // generator: 4-step walks from every 20th part, every step a
     // replayable md5-hash neighbor pick (no RNG, so the walk corpus is
     // retry-stable and auditable). The degree cap bounds the per-node
     // neighbor-index window by construction (the structural guard the
-    // graph family uses everywhere); each step is two frontier-sized
-    // equi-joins against checkpointed index/degree tables.
+    // graph family uses everywhere); each step is one frontier-sized
+    // equi-join against the checkpointed degree-annotated index.
     ("q_graph_walks", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val canon = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("src"), col("pk2").as("dst"))
-        // lazy cut (r13): both symmetrize arms read the capped graph —
-        // compute the cap pipeline once via the checkpoint cache
-        val capped = Graph.capDegree(canon, "src", "dst", maxDegree = 8)
-          .localCheckpoint(false)
-        val sym = capped.union(
-          capped.select(col("dst").as("src"), col("src").as("dst")))
+        val sym = cappedCoOrder(s, d)
         val seeds = sym.select(col("src")).distinct()
           .filter(col("src") % 20 === 0)
           .select(col("src").as("wid"), col("src").as("nd"))
@@ -334,19 +275,7 @@ private[graft] object GraphQueries {
     // frontier equi-join + combine-enabled count + anti-join.
     ("q_graph_cascade", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val canon = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("src"), col("pk2").as("dst"))
-        // lazy cut (r13): both symmetrize arms read the capped graph —
-        // compute the cap pipeline once via the checkpoint cache
-        val capped = Graph.capDegree(canon, "src", "dst", maxDegree = 8)
-          .localCheckpoint(false)
-        val sym = capped.union(
-          capped.select(col("dst").as("src"), col("src").as("dst")))
+        val sym = cappedCoOrder(s, d)
         val seeds = sym.select(col("src")).distinct()
           .filter(col("src") % 20 === 0)
         Graph.cascade(sym, "src", "dst", seeds, "src",
@@ -355,16 +284,19 @@ private[graft] object GraphQueries {
       },
       Some(cascadeOracleSql(threshold = 2, rounds = 3))),
 
+    // The STRUCTURAL hub guard, oracle-verified: the same co-order graph
+    // as q_graph_triangles but degree-capped with Graph.capDegree
+    // (maxDegree=8) before counting — per-node deterministic bottom-k by
+    // md5("src|dst") rank, an edge surviving only at both endpoints. The
+    // oracle replays the sampling exactly (row_number over the md5 order,
+    // keep rank<=8, count(*)=2), then the full oriented-wedge pipeline on
+    // the capped subgraph — proving the capped result is EXACT on the
+    // sampled subgraph, not merely "bounded". maxDegree is what makes a
+    // hub-degenerate derived graph safe at corpus scale (wedge fan-out
+    // <= cap, no quadratic key).
     ("q_graph_capped", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val e = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("src"), col("pk2").as("dst"))
-        Graph.triangleCounts(e, "src", "dst", maxDegree = 8)
+        Graph.triangleCounts(coOrderPairs(s, d), "src", "dst", maxDegree = 8)
       }): Q
       },
       Some("""WITH lp AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
@@ -411,12 +343,6 @@ private[graft] object GraphQueries {
             ELSE 0.0 END AS clustering
           FROM deg d LEFT JOIN pn ON d.node = pn.node""")),
 
-    // Fixed-round BFS levels (Graph.bfsLevels) from a small seed set over
-    // the part<->supplier bipartite graph — hop-bounded reachability, the
-    // "how far does contamination / influence spread" primitive the
-    // centrality family lacks. Each hop is one frontier equi-join + LEFT
-    // ANTI against the accumulated levels; the unrolled oracle pins the
-    // enters-at-its-minimum-hop admission rule.
     // Link prediction by common-neighbor Jaccard: wedge join over the
     // DEGREE-CAPPED co-order graph (the same structural hub guard as
     // q_graph_capped — wedge fan-out is quadratic in degree), existing
@@ -425,14 +351,8 @@ private[graft] object GraphQueries {
     // "people also bought" — edge-level, where triangles are node-level.
     ("q_graph_linkpred", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val e0 = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("src"), col("pk2").as("dst")).distinct()
-        val capped = Graph.capDegree(e0, "src", "dst", maxDegree = 8)
+        val capped = Graph.capDegree(coOrderPairs(s, d).distinct(),
+            "src", "dst", maxDegree = 8)
           // adj, wedge, anti and degrees all rescan it — lazy cut (r13):
           // same compute-once via the checkpoint cache; its shuffle stages
           // still run at the call (AQE), only the cache fill waits
@@ -490,12 +410,16 @@ private[graft] object GraphQueries {
           FROM cand JOIN deg da ON cand.a = da.n
             JOIN deg db ON cand.b = db.n""")),
 
+    // Fixed-round BFS levels (Graph.bfsLevels) from a small seed set over
+    // the part<->supplier bipartite graph — hop-bounded reachability, the
+    // "how far does contamination / influence spread" primitive the
+    // centrality family lacks. Each hop is one frontier equi-join + LEFT
+    // ANTI against the accumulated levels; the unrolled oracle pins the
+    // enters-at-its-minimum-hop admission rule.
     ("q_graph_bfs", {
       ((s: SparkSession, d: String) => {
-        val seeds = t(s, d, "lineitem").filter(col("l_partkey") < 5)
-          .select((col("l_partkey") * 2).as("seed"))
         Graph.bfsLevels(partSupplierEdges(s, d), "src", "dst",
-          seeds, "seed", rounds = 3)
+          partSeeds(s, d), "seed", rounds = 3)
       }): Q
       },
       Some(bfsOracleSql(3))),
@@ -509,10 +433,8 @@ private[graft] object GraphQueries {
     // both phases and the centrality itself hash-matches.
     ("q_graph_betweenness", {
       ((s: SparkSession, d: String) => {
-        val seeds = t(s, d, "lineitem").filter(col("l_partkey") < 5)
-          .select((col("l_partkey") * 2).as("seed"))
         Graph.betweennessSampled(partSupplierEdges(s, d), "src", "dst",
-          seeds, "seed", rounds = 3)
+          partSeeds(s, d), "seed", rounds = 3)
       }): Q
       },
       Some(betweennessOracleSql(3))),
@@ -540,19 +462,12 @@ private[graft] object GraphQueries {
     // integer recurrence, unrolled oracle.
     ("q_graph_ppr", {
       ((s: SparkSession, d: String) => {
-        val seeds = t(s, d, "lineitem").filter(col("l_partkey") < 5)
-          .select((col("l_partkey") * 2).as("seed"))
         Graph.pprInt(partSupplierEdges(s, d), "src", "dst",
-          seeds, "seed", iters = 4)
+          partSeeds(s, d), "seed", iters = 4)
       }): Q
       },
       Some(pprOracleSql(4))),
 
-    // Weighted shortest paths (Graph.ssspInt), 4 Bellman-Ford rounds from
-    // the part-id<5 seed set over the part<->supplier graph weighted by
-    // the pairing's min line price in cents — "cheapest route within r
-    // legs", exact by the Bellman-Ford invariant, BIGINT min/plus so the
-    // unrolled oracle replays it bit-identically.
     // Earliest-arrival TEMPORAL reachability (Graph.temporalReach — Wu
     // et al. VLDB'14): supplier<->customer contact edges timestamped by
     // order date, traversable only at t >= arrival(u) — the propagation
@@ -583,19 +498,22 @@ private[graft] object GraphQueries {
       },
       Some(temporalOracleSql(3))),
 
+    // Weighted shortest paths (Graph.ssspInt), 4 Bellman-Ford rounds from
+    // the part-id<5 seed set over the part<->supplier graph weighted by
+    // the pairing's min line price in cents — "cheapest route within r
+    // legs", exact by the Bellman-Ford invariant, BIGINT min/plus so the
+    // unrolled oracle replays it bit-identically.
     ("q_graph_sssp", {
       ((s: SparkSession, d: String) => {
-        val li = t(s, d, "lineitem")
         // lazy cut (r13): both symmetrize arms read fwd
-        val fwd = li.groupBy((col("l_partkey") * 2).as("src"),
+        val fwd = t(s, d, "lineitem").groupBy((col("l_partkey") * 2).as("src"),
             (col("l_suppkey") * 2 + 1).as("dst"))
           .agg(min(cents(col("l_extendedprice"))).as("w"))
           .localCheckpoint(false)
         val edges = fwd.union(
           fwd.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-        val seeds = li.filter(col("l_partkey") < 5)
-          .select((col("l_partkey") * 2).as("seed"))
-        Graph.ssspInt(edges, "src", "dst", "w", seeds, "seed", rounds = 4)
+        Graph.ssspInt(edges, "src", "dst", "w", partSeeds(s, d), "seed",
+          rounds = 4)
       }): Q
       },
       Some(ssspOracleSql(4))),
@@ -612,19 +530,7 @@ private[graft] object GraphQueries {
     // arithmetic.
     ("q_graph_anf", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val canon = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("src"), col("pk2").as("dst"))
-        // lazy cut (r13): both symmetrize arms read the capped graph —
-        // compute the cap pipeline once via the checkpoint cache
-        val capped = Graph.capDegree(canon, "src", "dst", maxDegree = 8)
-          .localCheckpoint(false)
-        val sym = capped.union(
-          capped.select(col("dst").as("src"), col("src").as("dst")))
+        val sym = cappedCoOrder(s, d)
         Graph.anfReach(sym, "src", "dst", k = 16, rounds = 2)
       }): Q
       },
@@ -640,19 +546,7 @@ private[graft] object GraphQueries {
     // propagation, not just arithmetic.
     ("q_graph_harmonic", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val canon = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("src"), col("pk2").as("dst"))
-        // lazy cut (r13): both symmetrize arms read the capped graph —
-        // compute the cap pipeline once via the checkpoint cache
-        val capped = Graph.capDegree(canon, "src", "dst", maxDegree = 8)
-          .localCheckpoint(false)
-        val sym = capped.union(
-          capped.select(col("dst").as("src"), col("src").as("dst")))
+        val sym = cappedCoOrder(s, d)
         Graph.anfHarmonic(sym, "src", "dst", k = 16, rounds = 3)
       }): Q
       },
@@ -667,19 +561,7 @@ private[graft] object GraphQueries {
     // radius with 10·T_r ≥ 9·T_R wins by exact integer comparison.
     ("q_graph_diameter", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val canon = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("src"), col("pk2").as("dst"))
-        // lazy cut (r13): both symmetrize arms read the capped graph —
-        // compute the cap pipeline once via the checkpoint cache
-        val capped = Graph.capDegree(canon, "src", "dst", maxDegree = 8)
-          .localCheckpoint(false)
-        val sym = capped.union(
-          capped.select(col("dst").as("src"), col("src").as("dst")))
+        val sym = cappedCoOrder(s, d)
         val h = Graph.anfHarmonic(sym, "src", "dst", k = 16, rounds = 3)
         val tot = h.agg(count(lit(1)).as("n_nodes"),
           sum(floor(col("n1") * 1e6).cast("long")).as("t1"),
@@ -738,17 +620,57 @@ private[graft] object GraphQueries {
     // referenced by the next round three times; the q_graph_hits lesson).
     ("q_graph_ktruss", {
       ((s: SparkSession, d: String) => {
-        val lp = t(s, d, "lineitem")
-          .filter(col("l_orderkey") % 5 === 0)
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct()
-        val e = lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
-          .filter(col("pk") < col("pk2"))
-          .select(col("pk").as("src"), col("pk2").as("dst"))
-        Graph.ktruss(e, "src", "dst", k = 4, rounds = 3)
+        Graph.ktruss(coOrderPairs(s, d), "src", "dst", k = 4, rounds = 3)
       }): Q
       },
       Some(ktrussOracleSql(k = 4, rounds = 3))))
+
+  /** The part<->supplier co-occurrence graph from lineitem: parts on even
+    * node ids, suppliers on odd (one BIGINT key space, bipartite so the
+    * two directions never collide), an edge per distinct (part, supplier)
+    * pairing, both directions. The stand-in for the similarity / hyperlink
+    * graphs a curation pipeline ranks before sampling. */
+  private def partSupplierEdges(s: SparkSession, d: String): DataFrame =
+    // lazy cut (r13): both symmetrize arms read the pairs — one lineitem
+    // distinct pass instead of two, via the checkpoint cache
+    bothWays(t(s, d, "lineitem")
+      .select((col("l_partkey") * 2).as("src"),
+        (col("l_suppkey") * 2 + 1).as("dst"))
+      .distinct()
+      .localCheckpoint(false))
+
+  /** The co-order pair graph: parts sharing an order, one (src, dst) row
+    * per order and part pair with src < dst (not distinct). Every fifth
+    * order only: the projection densifies quadratically with corpus size
+    * (a part's degree grows with its order count), so the graph is a
+    * deterministic order sample — the plan shape (and the oriented-wedge
+    * bound) is what scales, not the constant. */
+  private def coOrderPairs(s: SparkSession, d: String): DataFrame = {
+    val lp = t(s, d, "lineitem")
+      .filter(col("l_orderkey") % 5 === 0)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .distinct()
+    lp.join(lp.select(col("ok"), col("pk").as("pk2")), "ok")
+      .filter(col("pk") < col("pk2"))
+      .select(col("pk").as("src"), col("pk2").as("dst"))
+  }
+
+  /** Both directions of every (src, dst) edge. */
+  private def bothWays(e: DataFrame): DataFrame =
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** The co-order graph capped at degree 8 ([[Graph.capDegree]]), then
+    * symmetrized. */
+  private def cappedCoOrder(s: SparkSession, d: String): DataFrame =
+    // lazy cut (r13): both symmetrize arms read the capped graph —
+    // compute the cap pipeline once via the checkpoint cache
+    bothWays(Graph.capDegree(coOrderPairs(s, d), "src", "dst", maxDegree = 8)
+      .localCheckpoint(false))
+
+  /** The part-id < 5 seed set, as part node ids (`seed`). */
+  private def partSeeds(s: SparkSession, d: String): DataFrame =
+    t(s, d, "lineitem").filter(col("l_partkey") < 5)
+      .select((col("l_partkey") * 2).as("seed"))
 
   /** One round of the [[graft.ops.Graph.ktruss]] per-edge support pipeline
     * in DuckDB: degree pass, (deg, id)-oriented edges, wedge self-join,

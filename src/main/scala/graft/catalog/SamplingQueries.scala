@@ -880,7 +880,7 @@ private[graft] object SamplingQueries {
   }
 
   /** Unrolled DuckDB replay of [[Graph.bfsLevels]] over the part<->supplier
-    * bipartite graph ([[partSupplierEdges]] construction mirrored): one
+    * bipartite graph (GraphQueries' `partSupplierEdges` mirrored): one
     * (frontier-join + NOT IN) CTE pair per hop, so the hash-match pins the
     * frontier-expansion admission rule (a node enters at its minimum hop,
     * exactly once). */
@@ -1220,22 +1220,6 @@ private[graft] object SamplingQueries {
           (SELECT node FROM a${r - 1}))"""
     }.mkString
     base + hops + s"\n      SELECT node, round FROM a$rounds"
-  }
-
-  /** The part<->supplier co-occurrence graph from lineitem: parts on even
-    * node ids, suppliers on odd (one BIGINT key space, bipartite so the
-    * two directions never collide), an edge per distinct (part, supplier)
-    * pairing, both directions. The stand-in for the similarity / hyperlink
-    * graphs a curation pipeline ranks before sampling. */
-  private[graft] def partSupplierEdges(s: SparkSession, d: String): DataFrame = {
-    // lazy cut (r13): both symmetrize arms read fwd — one lineitem
-    // distinct pass instead of two, via the checkpoint cache
-    val fwd = t(s, d, "lineitem")
-      .select((col("l_partkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-      .localCheckpoint(false)
-    fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
   }
 
 }

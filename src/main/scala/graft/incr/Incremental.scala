@@ -65,8 +65,8 @@ object Incremental {
   def maxWatermark(cols: Seq[String], default: String): Column =
     greatest(cols.map(c => coalesce(max(col(c)), lit(default))): _*)
 
-  /** P3 — incremental window predicate as a Spark Column: 1 or 2 comma-
-    * separated filter columns, two-column variant OR'd
+  /** P3 — incremental window predicate as a Spark Column: comma-separated
+    * filter columns, one clause per column, OR'd
     * (load_with_query.py:185-193). */
   def windowPredicate(filterColumn: String, start: Column, end: Column): Column = {
     val cols = filterColumn.split(",").map(_.trim).filter(_.nonEmpty)
@@ -80,12 +80,13 @@ object Incremental {
   def epochToTimestamp(c: Column): Column = timestamp_seconds(c)
 
   /** P3 as pushed-down SQL text for JDBC `query` mode
-    * (load_with_query.py:178-195). */
+    * (load_with_query.py:178-195): the same clauses as [[windowPredicate]],
+    * parenthesized and OR'd when there are several columns. */
   def windowPredicateSql(filterColumn: String, start: String, end: String): String = {
     val cols = filterColumn.split(",").map(_.trim).filter(_.nonEmpty)
     if (cols.length >= 2)
-      s"(${cols(0)} IS NOT NULL and ${cols(0)} BETWEEN $start AND $end) OR " +
-        s"(${cols(1)} IS NOT NULL and ${cols(1)} BETWEEN $start AND $end)"
+      cols.map(c => s"($c IS NOT NULL and $c BETWEEN $start AND $end)")
+        .mkString(" OR ")
     else
       s"${cols(0)} is not null and ${cols(0)} BETWEEN $start AND $end"
   }

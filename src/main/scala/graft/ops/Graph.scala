@@ -17,6 +17,22 @@ import org.apache.spark.sql.functions._
  */
 object Graph {
 
+  /** The BIGINT (src, dst) edge intake every operator opens with, plus the
+    * `extra` columns a weighted or timed operator carries. */
+  private def intake(edges: DataFrame, srcCol: String, dstCol: String,
+      extra: Column*): DataFrame =
+    edges.select(Seq(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")) ++ extra: _*)
+
+  /** The canonical undirected edge set: (least, greatest) as (a, b),
+    * self-loops dropped, duplicates collapsed. */
+  private def canonicalEdges(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame =
+    edges.select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
+        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
   /**
    * Structural degree cap — the graph-side analog of the dedup family's
    * `maxBucket` / `maxDf` hot-key guards. Derived graphs (co-order,
@@ -49,10 +65,10 @@ object Graph {
   def capDegree(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", maxDegree: Int = 1000): DataFrame = {
     require(maxDegree >= 1, s"capDegree needs maxDegree >= 1, got $maxDegree")
-    // lazy cut (r13): both incident union arms read e — uncut, the
-    // caller's pipeline + distinct evaluated twice per cap
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().localCheckpoint(false)
+    // not cut here: every caller cuts the capped result, and both
+    // incident union arms read the same distinct, whose exchange the
+    // plan reuses
+    val e = intake(edges, srcCol, dstCol).distinct()
     val s = struct(
       md5(concat_ws("|", col("src"), col("dst")).cast("binary")).as("h"),
       col("src"), col("dst"))
@@ -111,13 +127,23 @@ object Graph {
    * `CheckpointEvery` the loop does cut the lineage, bounding plan size
    * for deep iteration counts.
    *
+   * The rounds are [[pprInt]]'s with every node a seed (one shared loop):
+   * its zero-rank and zero-contribution filters drop only zero terms, so
+   * the output is the recurrence above at every `scale`.
+   *
    * Output: (node BIGINT, rank BIGINT) — every node of the graph.
    */
   def pageRankInt(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", iters: Int = 5,
-      scale: Long = 1000000000000L,
-      broadcastRanks: Boolean = false): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 0, s"pageRankInt needs iters >= 0, got $iters")
+    rankRounds(edges, srcCol, dstCol, None, iters, scale)
+  }
+
+  /** The fixed-round integer rank recurrence of [[pageRankInt]] (`seeds`
+    * None: every node is a seed, with no seed join) and [[pprInt]]. */
+  private def rankRounds(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: Option[DataFrame], iters: Int, scale: Long): DataFrame = {
     // evaluate the caller's edge pipeline ONCE: deg, eo and nodes all
     // reference it, and cross-job exchange reuse does not exist — without
     // this checkpoint an upstream distinct/banding subtree runs per derived
@@ -126,35 +152,56 @@ object Graph {
     // lazy cut is not job-free: under AQE the shuffle stages below it run
     // at the call, and only its last stage and the cache fill wait for the
     // first action that reads it.
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint(false)
+    val e = intake(edges, srcCol, dstCol).localCheckpoint(false)
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // out-edges annotated with the sender's degree, evaluated once
     val eo = e.join(deg, "src").localCheckpoint(false)
-    val nodes = e.select(col("src").as("node"))
+    val all = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint(false)
-    val teleport = 15L * scale / 100L
+      .distinct()
+    // (node, isseed): the seed flag gates the starting rank and teleport
+    val nodes = seeds match {
+      case None => all.localCheckpoint(false).withColumn("isseed", lit(1L))
+      case Some(sd) => all
+        .join(sd.withColumn("isseed", lit(1L)), Seq("node"), "left_outer")
+        .select(col("node"), coalesce(col("isseed"), lit(0L)).as("isseed"))
+        .localCheckpoint(false)
+    }
     val CheckpointEvery = 8
-    var ranks = nodes.withColumn("rank", lit(scale))
+    var ranks = nodes.select(col("node"),
+      (col("isseed") * scale).as("rank"))
     for (i <- 1 to iters) {
+      // the zero arm (one row per node) carries the node's seed flag, and
+      // max() over the group recovers it — contrib rows carry 0. This
+      // keeps the round at ONE join + ONE combine-enabled aggregate: the
+      // earlier re-join of `nodes` to re-attach isseed broadcast fine at
+      // small |V| but became a per-round sort-merge of the whole node
+      // table at 10x (sf1 scaling run measured 16.8x for 10x data; this
+      // form restores ~linear)
+      // SPARSE frontier: only nodes with mass can contribute (rank = 0
+      // gives c = 0 DIV d = 0 — dropping the row is exact), and a
+      // contribution the integer division floors to 0 adds nothing to the
+      // sum (the zero arm below keeps every node's group alive). PPR mass
+      // lives on the seed BALL — round r joins |ball_r| rows, not |V|, and
+      // ships only nonzero messages; measured 15.25x for 10x data before,
+      // because every round shuffled the full zero-rank node table through
+      // the join and the aggregate.
       // `DIV`, not `/`: Spark's `/` on BIGINT is DOUBLE division, whose
       // 53-bit mantissa rounds 1e12-scale ranks before the floor — the
       // integral operator keeps every round exact
-      // `broadcastRanks` pins the |V|-row rank table to a broadcast join
-      // (callers who KNOW their node set is dimension-sized); the default
-      // lets AQE decide per round from the actual size — the right call
-      // for graphs whose rank table may outgrow executor memory
-      val rhs = if (broadcastRanks) broadcast(ranks) else ranks
-      val contrib = eo.join(rhs, eo("src") === rhs("node"))
-        .select(col("dst").as("node"), expr("rank DIV outdeg").as("c"))
-      // union the zero row per node so isolated-in-degree nodes keep their
-      // teleport rank (and the output keeps every node every round)
+      val contrib = eo.join(ranks.filter(col("rank") =!= 0L),
+          eo("src") === ranks("node"))
+        .select(col("dst").as("node"), expr("rank DIV outdeg").as("c"),
+          lit(0L).as("seedflag"))
+        .filter(col("c") =!= 0L)
       ranks = contrib
-        .union(nodes.withColumn("c", lit(0L)))
-        .groupBy("node").agg(sum(col("c")).as("s"))
+        .union(nodes.select(col("node"), lit(0L).as("c"),
+          col("isseed").as("seedflag")))
+        .groupBy("node").agg(sum(col("c")).as("s"),
+          max(col("seedflag")).as("isseed"))
         .select(col("node"),
-          (lit(teleport) + expr("(85 * s) DIV 100")).as("rank"))
+          (col("isseed") * (15L * scale / 100L) +
+            expr("(85 * s) DIV 100")).as("rank"))
       if (i % CheckpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
     }
     ranks.select(col("node"), col("rank"))
@@ -169,8 +216,7 @@ object Graph {
   def degrees(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
     // lazy cut (r13): both union arms read e
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint(false)
+    val e = intake(edges, srcCol, dstCol).localCheckpoint(false)
     e.select(col("src").as("node"), lit(1L).as("o"), lit(0L).as("i"))
       .union(e.select(col("dst").as("node"), lit(0L).as("o"), lit(1L).as("i")))
       .groupBy("node")
@@ -201,8 +247,7 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, s"kCore needs k,rounds >= 1")
-    var e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint(false)
+    var e = intake(edges, srcCol, dstCol).localCheckpoint(false)
     for (i <- 1 to rounds) {
       val alive = e.groupBy("src").agg(count(lit(1)).as("c"))
         .filter(col("c") >= k).select("src")
@@ -252,8 +297,7 @@ object Graph {
     // a surviving edge survive together. Communities on the sampled
     // subgraph; nodes stripped of every edge drop out (isolated).
     val sym =
-      if (maxDegree <= 0) edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
+      if (maxDegree <= 0) intake(edges, srcCol, dstCol)
       else {
         val canon = capDegree(
           edges.select(least(col(srcCol), col(dstCol)).cast("long").as("src"),
@@ -324,8 +368,7 @@ object Graph {
     // lazy cuts (r13): e feeds the degree aggregate, the 2m anchor and
     // the candidate join (3 lazy arms re-ran the caller's distinct
     // pipeline); deg feeds both join sides
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().localCheckpoint(false)
+    val e = intake(edges, srcCol, dstCol).distinct().localCheckpoint(false)
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
       .localCheckpoint(false)
     val m2 = e.agg(count(lit(1)).as("m2")) // = 2m on a symmetric list
@@ -371,11 +414,7 @@ object Graph {
    */
   def triangleCounts(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", maxDegree: Int = 0): DataFrame = {
-    val canon0 = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val canon0 = canonicalEdges(edges, srcCol, dstCol)
     // maxDegree > 0 = structural hub guard ([[capDegree]]): triangle/
     // clustering counts become exact-on-the-sampled-subgraph (an
     // under-count of the full graph), with wedge fan-out bounded by
@@ -389,38 +428,7 @@ object Graph {
       // cut — compute-once via the checkpoint cache; under AQE its
       // shuffle stages run at the call, the cache fill waits)
       .localCheckpoint(false)
-    val deg = canon.select(col("a").as("node"))
-      .union(canon.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    // orient each edge from its (deg, id)-smaller endpoint (lo) to the
-    // larger (hi); the id tie-break makes the order total, so every edge
-    // gets exactly one orientation
-    val da = deg.select(col("node").as("a"), col("deg").as("da"))
-    val db = deg.select(col("node").as("b"), col("deg").as("db"))
-    val oriented = canon.join(da, "a").join(db, "b")
-      .select(
-        when(col("da") < col("db") ||
-             (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("lo"), col("b").as("hi"),
-            col("da").as("dlo"), col("db").as("dhi")))
-          .otherwise(struct(col("b").as("lo"), col("a").as("hi"),
-            col("db").as("dlo"), col("da").as("dhi"))).as("o"))
-      .select(col("o.lo").as("lo"), col("o.hi").as("hi"),
-        col("o.dlo").as("dlo"), col("o.dhi").as("dhi"))
-      .localCheckpoint(false)
-    // wedges pivot at lo (the low-degree endpoint — bounded fan-out);
-    // order the two spokes by the SAME (deg, id) total order so each
-    // unordered spoke pair appears once, then close against the oriented
-    // edge (x, y): x precedes y in that order by construction
-    val w1 = oriented.select(col("lo").as("p"), col("hi").as("x"),
-      col("dhi").as("dx"))
-    val w2 = oriented.select(col("lo").as("p"), col("hi").as("y"),
-      col("dhi").as("dy"))
-    val wedges = w1.join(w2, Seq("p"))
-      .filter(col("dx") < col("dy") ||
-        (col("dx") === col("dy") && col("x") < col("y")))
-    val closing = oriented.select(col("lo").as("x"), col("hi").as("y"))
-    val tris = wedges.join(closing, Seq("x", "y")).select("p", "x", "y")
+    val (deg, tris) = triangles(canon)
     val perNode = tris.select(col("p").as("node"))
       .union(tris.select(col("x").as("node")))
       .union(tris.select(col("y").as("node")))
@@ -471,12 +479,7 @@ object Graph {
     // run at the call under AQE. r12 paid a separate eager-cut job before
     // each count, and that per-round driver job read slower than r11 in
     // both driver runs despite the removed zero-join.
-    var e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(false)
+    var e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint(false)
     var prevCount = e.count()
     var converged = false
     for (_ <- 1 to rounds if !converged) {
@@ -503,26 +506,16 @@ object Graph {
     edgeSupport(e)
   }
 
-  /** Per-edge triangle support on a canonical (a < b, distinct) edge set —
-    * the [[triangleCounts]] oriented-wedge pipeline, attributed to edges
-    * instead of pairs. One degree aggregate, one wedge self-join bounded by
-    * the (deg, id) orientation, one 3-edges-per-triangle explode, one
-    * combine-enabled count.
-    *
-    * `withZeros = true` (the reporting form) left-joins the counts back
-    * onto the full edge set so unsupported edges appear with support 0.
-    * `withZeros = false` emits only edges that close >= 1 triangle — the
-    * peel form: [[ktruss]]'s per-round filter keeps support >= k-2 >= 1,
-    * so the zero rows (and the join that manufactures them) are dead
-    * weight there. Every emitted (a, b) is a canonical input edge (each
-    * triangle's three edges are drawn from the oriented edge set), and
-    * the groupBy makes the pairs distinct, so the peel invariant holds
-    * without the re-join. */
-  private[graft] def edgeSupport(canon: DataFrame,
-      withZeros: Boolean = true): DataFrame = {
+  /** The triangle enumerator shared by [[triangleCounts]] and
+    * [[edgeSupport]]: the degree table (node, deg) of a canonical (a < b,
+    * distinct) edge set, and its triangles (p, x, y), each listed once. */
+  private def triangles(canon: DataFrame): (DataFrame, DataFrame) = {
     val deg = canon.select(col("a").as("node"))
       .union(canon.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
+    // orient each edge from its (deg, id)-smaller endpoint (lo) to the
+    // larger (hi); the id tie-break makes the order total, so every edge
+    // gets exactly one orientation
     val da = deg.select(col("node").as("a"), col("deg").as("da"))
     val db = deg.select(col("node").as("b"), col("deg").as("db"))
     val oriented = canon.join(da, "a").join(db, "b")
@@ -536,6 +529,10 @@ object Graph {
       .select(col("o.lo").as("lo"), col("o.hi").as("hi"),
         col("o.dhi").as("dhi"))
       .localCheckpoint(false)
+    // wedges pivot at lo (the low-degree endpoint — bounded fan-out);
+    // order the two spokes by the SAME (deg, id) total order so each
+    // unordered spoke pair appears once, then close against the oriented
+    // edge (x, y): x precedes y in that order by construction
     val w1 = oriented.select(col("lo").as("p"), col("hi").as("x"),
       col("dhi").as("dx"))
     val w2 = oriented.select(col("lo").as("p"), col("hi").as("y"),
@@ -544,7 +541,26 @@ object Graph {
       .filter(col("dx") < col("dy") ||
         (col("dx") === col("dy") && col("x") < col("y")))
     val closing = oriented.select(col("lo").as("x"), col("hi").as("y"))
-    val tris = wedges.join(closing, Seq("x", "y")).select("p", "x", "y")
+    (deg, wedges.join(closing, Seq("x", "y")).select("p", "x", "y"))
+  }
+
+  /** Per-edge triangle support on a canonical (a < b, distinct) edge set —
+    * the [[triangles]] enumerator [[triangleCounts]] also runs, attributed
+    * to edges instead of nodes: one 3-edges-per-triangle explode, one
+    * combine-enabled count.
+    *
+    * `withZeros = true` (the reporting form) left-joins the counts back
+    * onto the full edge set so unsupported edges appear with support 0.
+    * `withZeros = false` emits only edges that close >= 1 triangle — the
+    * peel form: [[ktruss]]'s per-round filter keeps support >= k-2 >= 1,
+    * so the zero rows (and the join that manufactures them) are dead
+    * weight there. Every emitted (a, b) is a canonical input edge (each
+    * triangle's three edges are drawn from the oriented edge set), and
+    * the groupBy makes the pairs distinct, so the peel invariant holds
+    * without the re-join. */
+  private[graft] def edgeSupport(canon: DataFrame,
+      withZeros: Boolean = true): DataFrame = {
+    val (_, tris) = triangles(canon)
     val triEdges = tris.select(explode(array(
         struct(least(col("p"), col("x")).as("a"),
           greatest(col("p"), col("x")).as("b")),
@@ -583,54 +599,9 @@ object Graph {
       seeds: DataFrame, seedCol: String, iters: Int,
       scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 0, s"pprInt needs iters >= 0, got $iters")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint(false)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val eo = e.join(deg, "src").localCheckpoint(false)
-    val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-      .withColumn("isseed", lit(1L))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .join(sd, Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("isseed"), lit(0L)).as("isseed"))
-      .localCheckpoint(false)
-    val CheckpointEvery = 8
-    var ranks = nodes.select(col("node"),
-      (col("isseed") * scale).as("rank"))
-    for (i <- 1 to iters) {
-      val rhs = ranks
-      // the zero arm (one row per node) carries the node's seed flag, and
-      // max() over the group recovers it — contrib rows carry 0. This
-      // keeps the round at ONE join + ONE combine-enabled aggregate (the
-      // pageRankInt shape): the earlier re-join of `nodes` to re-attach
-      // isseed broadcast fine at small |V| but became a per-round
-      // sort-merge of the whole node table at 10x (sf1 scaling run
-      // measured 16.8x for 10x data; this form restores ~linear)
-      // SPARSE frontier: only nodes with mass can contribute (rank = 0
-      // gives c = 0 DIV d = 0 — dropping the row is exact), and a
-      // contribution the integer division floors to 0 adds nothing to the
-      // sum (the zero arm below keeps every node's group alive). Unlike
-      // global PageRank, PPR mass lives on the seed BALL — round r joins
-      // |ball_r| rows, not |V|, and ships only nonzero messages; measured
-      // 15.25x for 10x data before, because every round shuffled the full
-      // zero-rank node table through the join and the aggregate.
-      val contrib = eo.join(rhs.filter(col("rank") =!= 0L),
-          eo("src") === rhs("node"))
-        .select(col("dst").as("node"), expr("rank DIV outdeg").as("c"),
-          lit(0L).as("seedflag"))
-        .filter(col("c") =!= 0L)
-      ranks = contrib
-        .union(nodes.select(col("node"), lit(0L).as("c"),
-          col("isseed").as("seedflag")))
-        .groupBy("node").agg(sum(col("c")).as("s"),
-          max(col("seedflag")).as("isseed"))
-        .select(col("node"),
-          (col("isseed") * (15L * scale / 100L) +
-            expr("(85 * s) DIV 100")).as("rank"))
-      if (i % CheckpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
-    }
-    ranks.select(col("node"), col("rank"))
+    rankRounds(edges, srcCol, dstCol,
+      Some(seeds.select(col(seedCol).cast("long").as("node")).distinct()),
+      iters, scale)
   }
 
   /**
@@ -662,11 +633,11 @@ object Graph {
    * message passes (combine-enabled sums, linear in |E|) and two 1-row max
    * aggregates. UNLIKE [[pageRankInt]], each round's raw-score table is
    * referenced TWICE (by its own max anchor and by the normalized scores),
-   * so the loop eagerly materializes the |V|-row score table per pass —
-   * the Pregel-style per-superstep cut. Left lazy, the double reference
+   * so the loop cuts the |V|-row score table per pass (lazily) — the
+   * Pregel-style per-superstep cut. Uncut, the double reference
    * re-evaluates the predecessor subtree per consumer and compounds
-   * 2^(2·iters)-fold (measured: 46 s lazy vs ~3 s eager at sf0.1, 3
-   * rounds — the q_dedup_clusters lesson in loop form).
+   * 2^(2·iters)-fold (measured: 46 s uncut vs ~3 s with eager cuts at
+   * sf0.1, 3 rounds — the q_dedup_clusters lesson in loop form).
    *
    * Output: (node, auth, hub) — every node of the graph.
    */
@@ -675,8 +646,7 @@ object Graph {
       scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"hitsInt needs iters >= 1, got $iters")
     require(scale >= 1L, s"hitsInt needs scale >= 1, got $scale")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint(false)
+    val e = intake(edges, srcCol, dstCol).localCheckpoint(false)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct().localCheckpoint(false)
@@ -729,16 +699,18 @@ object Graph {
       s"bfsLevels needs 1 <= rounds <= 32, got $rounds — deep traversals " +
       "belong on the components/star-contraction path")
     // Evaluate the caller's edge pipeline ONCE (every round rescans it)
-    // and materialize each round's frontier eagerly: round r's anti-join
-    // references every earlier frontier, so a lazy union chain would
-    // re-evaluate round r-1's shuffle subtree once per later round
-    // (quadratic recompute; measured 6.4 s lazy vs 3.1 s eager at sf0.1,
-    // 3 rounds). Frontiers are node lists — small next to edges — the
-    // same per-iteration materialization Pregel-style BFS does; this is
-    // the deliberate opposite of pageRankInt's one-lazy-DAG policy,
-    // because PageRank's rounds reference ONLY their predecessor.
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint(false)
+    // and cut each round's frontier: round r's anti-join references
+    // every earlier frontier, so an uncut union chain would re-evaluate
+    // round r-1's shuffle subtree once per later round (quadratic
+    // recompute; measured 6.4 s uncut vs 3.1 s with per-round cuts at
+    // sf0.1, 3 rounds, when the cuts were still eager). The cuts are
+    // LAZY (r13): under AQE a frontier's shuffle stages run at the call,
+    // and only its last stage and the cache fill wait for the first
+    // action that reads it. Frontiers are node lists — small next to
+    // edges — the same per-iteration materialization Pregel-style BFS
+    // does; this is the deliberate opposite of pageRankInt's one-lazy-DAG
+    // policy, because PageRank's rounds reference ONLY their predecessor.
+    val e = intake(edges, srcCol, dstCol).localCheckpoint(false)
     var lvl = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .withColumn("level", lit(0L)).localCheckpoint(false)
     var frontier = lvl.select("node")
@@ -767,9 +739,9 @@ object Graph {
    *                   for v first reached at round r,
    *
    * each round ONE frontier equi-join + sum-aggregate + anti-join
-   * against the reached set ([[bfsLevels]]' eager-frontier policy — the
-   * anti-join references all earlier rounds). Backward phase, level
-   * l = rounds-1 down to 1:
+   * against the reached set, with [[bfsLevels]]' per-round lazy frontier
+   * cut (the anti-join references all earlier rounds). Backward phase,
+   * level l = rounds-1 down to 1:
    *
    *   delta(s, v) = sum over edges (v, w), level(s, w) = level(s, v)+1
    *                 of (sigma(s,v) * (SCALE + delta(s, w))) div sigma(s,w)
@@ -794,8 +766,7 @@ object Graph {
       s"betweennessSampled needs 2 <= rounds <= 8, got $rounds — deeper " +
       "traversals multiply per-source state; raise sources, not depth")
     val scale = 1000000L
-    val e0 = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+    val e0 = intake(edges, srcCol, dstCol)
     val e = (if (maxDegree <= 0) e0
       else capDegree(e0, "src", "dst", maxDegree)).localCheckpoint(false)
     // forward: per-source levels + path counts, cut per round (lazily —
@@ -859,31 +830,6 @@ object Graph {
   }
 
   /**
-   * Weighted single-source (single-SET) shortest paths: fixed-round
-   * Bellman-Ford relaxation with BIGINT edge weights —
-   *
-   *   dist_0(v)   = 0 for v in the seed set (absent otherwise)
-   *   dist_t+1(v) = min( dist_t(v), min_{(u,v,w) in E} dist_t(u) + w )
-   *
-   * After r rounds, `dist(v)` is the exact cheapest cost over paths of at
-   * most r hops (the Bellman-Ford invariant), so a fixed `rounds` bounds
-   * the search radius the same way [[bfsLevels]] does for hop counts —
-   * the "cheapest route within r legs" primitive (logistics cost,
-   * weighted link distance on a similarity graph). Integer min/plus has
-   * no ordering sensitivity, so the recurrence is bit-identical across
-   * engines and a DuckDB oracle replays it round by round.
-   *
-   * Scale shape: each round is ONE equi-join of the reached-set against
-   * the edge list plus ONE min-aggregate — both shuffle on the node key,
-   * map-side combining, linear in reached edges per round. Rounds
-   * reference only their predecessor, so the whole traversal pipelines as
-   * a single lazy DAG (pageRankInt's policy, not bfsLevels' eager one —
-   * there is no anti-join against accumulated history here), with a
-   * periodic lineage cut. Weights must be non-negative for the
-   * min-within-r-hops reading (negative edges still relax correctly but
-   * the radius interpretation is lost); unreached nodes are absent.
-   */
-  /**
    * Degree assortativity (Newman 2002): the Pearson correlation of the
    * endpoint degrees across the edge list — POSITIVE when hubs link to
    * hubs (social-graph shape), NEGATIVE when hubs link to leaves
@@ -911,8 +857,7 @@ object Graph {
     // lazy cuts (r13): e feeds the degree aggregate and the pair join,
     // deg feeds both endpoint joins — compute each once via the
     // checkpoint cache instead of once per lazy arm
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint(false)
+    val e = intake(edges, srcCol, dstCol).localCheckpoint(false)
     val deg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
       .localCheckpoint(false)
@@ -935,6 +880,31 @@ object Graph {
       floor(lit(1e6) * cov / varx).cast("long").as("r_micro"))
   }
 
+  /**
+   * Weighted single-source (single-SET) shortest paths: fixed-round
+   * Bellman-Ford relaxation with BIGINT edge weights —
+   *
+   *   dist_0(v)   = 0 for v in the seed set (absent otherwise)
+   *   dist_t+1(v) = min( dist_t(v), min_{(u,v,w) in E} dist_t(u) + w )
+   *
+   * After r rounds, `dist(v)` is the exact cheapest cost over paths of at
+   * most r hops (the Bellman-Ford invariant), so a fixed `rounds` bounds
+   * the search radius the same way [[bfsLevels]] does for hop counts —
+   * the "cheapest route within r legs" primitive (logistics cost,
+   * weighted link distance on a similarity graph). Integer min/plus has
+   * no ordering sensitivity, so the recurrence is bit-identical across
+   * engines and a DuckDB oracle replays it round by round.
+   *
+   * Scale shape: each round is ONE equi-join of the reached-set against
+   * the edge list plus ONE min-aggregate — both shuffle on the node key,
+   * map-side combining, linear in reached edges per round. Rounds
+   * reference only their predecessor, so the whole traversal pipelines as
+   * a single lazy DAG (pageRankInt's policy, not bfsLevels' per-round
+   * frontier cut — there is no anti-join against accumulated history
+   * here), with a periodic lineage cut. Weights must be non-negative for the
+   * min-within-r-hops reading (negative edges still relax correctly but
+   * the radius interpretation is lost); unreached nodes are absent.
+   */
   def ssspInt(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, seeds: DataFrame, seedCol: String,
       rounds: Int): DataFrame = {
@@ -955,8 +925,7 @@ object Graph {
     // fill wait for the final job) and the node set derives from the CUT
     // edge table, never the caller's unmaterialized pipeline (the ANF
     // fold lesson: each lazy arm re-evaluates whatever is not cached).
-    val e1 = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"),
+    val e1 = intake(edges, srcCol, dstCol,
       col(wCol).cast("long").as("w")).localCheckpoint(false)
     val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .localCheckpoint(false)
@@ -1013,8 +982,7 @@ object Graph {
     // rounds pipeline as one lazy DAG with no per-round blocking jobs.
     // Cuts are lazy and the node set derives from the cut edge table
     // (see ssspInt).
-    val e1 = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint(false)
+    val e1 = intake(edges, srcCol, dstCol).localCheckpoint(false)
     val sd = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .localCheckpoint(false)
     val nodes = e1.select(col("src").as("node"))
@@ -1080,8 +1048,7 @@ object Graph {
       s"randomWalks needs 1 <= steps <= 64, got $steps")
     require(maxDegree >= 1,
       s"randomWalks needs maxDegree >= 1, got $maxDegree")
-    val raw = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
+    val raw = intake(edges, srcCol, dstCol)
     // structural out-degree cap: deterministic md5 bottom-k per src —
     // exact no-op when out-degree is already <= maxDegree. Degree is
     // carried ON the indexed adjacency (a count window over the same
@@ -1171,8 +1138,7 @@ object Graph {
     // distinct+checkpoint (not the caller's pipeline — the r12 ANF fold
     // attempt failed precisely because its union re-evaluated an
     // unmaterialized caller subtree per arm).
-    val e1 = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().localCheckpoint(false)
+    val e1 = intake(edges, srcCol, dstCol).distinct().localCheckpoint(false)
     val nodes = e1.select(col("src").as("node"))
       .union(e1.select(col("dst").as("node"))).distinct()
     val e = e1.unionAll(nodes.select(col("node").as("src"),
@@ -1225,8 +1191,7 @@ object Graph {
     require(rounds >= 1 && rounds <= 8,
       s"anfHarmonic needs 1 <= rounds <= 8, got $rounds")
     val E = graft.plans.GraftExpressions
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().localCheckpoint(false)
+    val e = intake(edges, srcCol, dstCol).distinct().localCheckpoint(false)
     def est(sk: Column): Column =
       when(size(sk) < k, size(sk).cast("double"))
         .otherwise(lit((k - 1).toDouble) * lit(1152921504606846976.0) /
@@ -1290,7 +1255,7 @@ object Graph {
    * chain-heavy production graph fails LOUDLY with the count and the
    * remedy (raise labelRounds) instead of returning a non-forest. The
    * check is one node-bounded join+count per Borůvka round, the same
-   * cost class as the eager localCheckpoint each round already pays.
+   * cost class as the lazy localCheckpoints each round already pays.
    *
    * Scale shape: per Borůvka round ONE |E|-sized double label join + ONE
    * combine-enabled min(struct) per component (O(1) state per group) +
@@ -1419,8 +1384,7 @@ object Graph {
     // compounding (r12's reason for the cut). Under AQE each round's
     // shuffle stages still run at the cut; only the last stage and the
     // cache fill wait for the final job.
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"),
+    val e = intake(edges, srcCol, dstCol,
       col(timeCol).cast("long").as("t")).localCheckpoint(false)
     var arr = seeds.select(col(seedCol).cast("long").as("node")).distinct()
       .withColumn("arr", lit(seedTime))

@@ -784,4 +784,61 @@ class GraphSpec extends SparkSpec {
     assert(got2 == Map(1L -> 0L, 2L -> 2L, 3L -> 3L, 4L -> 7L),
       got2.toString)
   }
+
+  test("pageRankInt equals pprInt with every node a seed, at any scale") {
+    // 10 -> 20 is a dangling source (teleport only); 30 fans out to 12
+    // nodes, so at scale 10 its contributions floor to 0, and at scale 3
+    // the teleport itself is 0 and zero ranks occur
+    val edges = Seq((10L, 20L), (20L, 30L), (101L, 30L)) ++
+      (1L to 12L).map(n => (30L, 100L + n))
+    val df = edges.toDF("src", "dst")
+    val all = edges.flatMap(e => Seq(e._1, e._2)).distinct.toDF("seed")
+    for (scale <- Seq(Scale, 10L, 3L); iters <- Seq(0, 1, 4, 9)) {
+      val pr = Graph.pageRankInt(df, "src", "dst", iters, scale)
+        .as[(Long, Long)].collect().toMap
+      val ppr = Graph.pprInt(df, "src", "dst", all, "seed", iters, scale)
+        .as[(Long, Long)].collect().toMap
+      assert(pr == ppr, s"scale=$scale iters=$iters")
+      if (scale == 3L && iters > 0) assert(pr(10L) == 0L, pr.toString)
+    }
+  }
+
+  test("ktruss at k = 3 keeps every triangle: supports sum as triangleCounts' (seeded)") {
+    // every edge closing a triangle has support >= 1, so the k = 3 peel
+    // keeps all triangles, and each triangle lands on its 3 edges just as
+    // triangleCounts lands it on its 3 nodes
+    val rnd = new scala.util.Random(41)
+    for (trial <- 1 to 6) {
+      val n = 6 + rnd.nextInt(7)
+      val edges = (for (a <- 1L to n; b <- a + 1 to n
+        if rnd.nextDouble() < 0.45)
+        yield if (rnd.nextBoolean()) (a, b) else (b, a)).toSeq
+      if (edges.nonEmpty) {
+        val df = edges.toDF("src", "dst")
+        val sup = Graph.ktruss(df, "src", "dst", k = 3, rounds = 2)
+          .agg(coalesce(sum("support"), lit(0L))).as[Long].head()
+        val tri = Graph.triangleCounts(df)
+          .agg(coalesce(sum("triangles"), lit(0L))).as[Long].head()
+        assert(sup == tri && tri == refTriangles(edges).values.sum,
+          s"trial $trial edges=$edges")
+      }
+    }
+  }
+
+  test("one co-order graph builder and one BIGINT edge intake in the source") {
+    // comments do not count (string literals are matched only so that a
+    // comment marker inside one stays code)
+    val commentOrString =
+      """(?s)"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*""".r
+    def code(file: String): String = commentOrString.replaceAllIn(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(file)),
+      m => if (m.matched.startsWith("/")) ""
+        else java.util.regex.Matcher.quoteReplacement(m.matched))
+    def count(file: String, needle: String): Int =
+      java.util.regex.Pattern.quote(needle).r.findAllIn(code(file)).size
+    assert(count("src/main/scala/graft/catalog/GraphQueries.scala",
+      "% 5 === 0") == 1)
+    assert(count("src/main/scala/graft/ops/Graph.scala",
+      """col(srcCol).cast("long").as("src")""") == 1)
+  }
 }

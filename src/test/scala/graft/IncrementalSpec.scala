@@ -55,6 +55,16 @@ class IncrementalSpec extends AnyFunSuite {
         "(f2 IS NOT NULL and f2 BETWEEN 'a' AND 'b')")
   }
 
+  test("three-column predicate SQL ORs every column windowPredicate ORs (P3)") {
+    // a source-side predicate naming fewer columns than the Spark-side
+    // filter would extract fewer rows than that filter keeps
+    val sql = Incremental.windowPredicateSql("f1, f2,f3", "'a'", "'b'")
+    assert(sql ==
+      "(f1 IS NOT NULL and f1 BETWEEN 'a' AND 'b') OR " +
+        "(f2 IS NOT NULL and f2 BETWEEN 'a' AND 'b') OR " +
+        "(f3 IS NOT NULL and f3 BETWEEN 'a' AND 'b')")
+  }
+
   test("full query generation with id alias, join, and templated filter") {
     val q = Incremental.fullQuery("S", "T", "a,b", idColumn = "k",
       joinExpr = "join X on T.a=X.a", filterExp = "a > 0",
